@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics as DataFrame dataflow (the family
@@ -16,6 +16,23 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
+  /** An edge with a null endpoint is no edge. The distributed loops
+    * never join on a null id, and the driver paths would fail reading
+    * it, so every graph operator with a driver path drops such edges
+    * up front, on both sides of its gate.
+    */
+  private[operators] def bothEnds(a: String, b: String): Column =
+    col(a).isNotNull && col(b).isNotNull
+
+  /** The small-graph gate of the driver paths: does `edges` have at most
+    * `bound` rows? The count is limit-bounded, so deciding never scans a
+    * huge edge set; a bound past `Int.MaxValue` (no `limit` can hold it)
+    * counts in full. A bound of 0 or less disables the driver path.
+    */
+  private[operators] def fitsOnDriver(edges: DataFrame, bound: Long): Boolean =
+    bound > 0 && (if (bound < Int.MaxValue) edges.limit(bound.toInt + 1) else edges)
+      .count() <= bound
+
   /** Weighted PageRank with uniform teleport and dangling-mass
     * redistribution.
     *
@@ -29,7 +46,7 @@ object GraphOps {
                nNodes: Long, damping: Double = 0.85, iters: Int = 5,
                smallGraphEdges: Long = 200000L): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(wCol).cast("double").as("w")).cache()
+      col(wCol).cast("double").as("w")).filter(bothEnds("src", "dst")).cache()
     // Adaptive small-graph path (the connectedComponents union-find
     // convention, r14): once the EDGE LIST (never the corpus — for
     // aggregated entity graphs like the nation trade graph it is
@@ -114,8 +131,7 @@ object GraphOps {
       .union(e.select(col("dst").as("n"))).schema("n").dataType
     val integral = Seq(e.schema("src").dataType, e.schema("dst").dataType)
       .forall(t => Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains(t))
-    if (!integral || smallGraphEdges <= 0) return None
-    if (e.limit(smallGraphEdges.toInt + 1).count() > smallGraphEdges) return None
+    if (!integral || !fitsOnDriver(e, smallGraphEdges)) return None
     val rows = e.select(col("src").cast("long"), col("dst").cast("long"), col("w"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -151,13 +167,12 @@ object GraphOps {
           source: Long, iters: Int,
           smallGraphEdges: Long = 200000L): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
+      col(dstCol).cast("long").as("dst")).filter(bothEnds("src", "dst"))
     // Adaptive small-graph path (see [[pageRank]]): hop distances are
     // INTEGER min-relaxations — the driver answer is bit-identical to
     // the distributed loop's (GraphOpsSpec pins equality), and each
     // skipped round saves a join+agg+localCheckpoint job cycle.
-    if (smallGraphEdges > 0 &&
-        e.limit(smallGraphEdges.toInt + 1).count() <= smallGraphEdges) {
+    if (fitsOnDriver(e, smallGraphEdges)) {
       val rows = e.collect().map(r => (r.getLong(0), r.getLong(1)))
       var dist = Map(source -> 0L)
       for (_ <- 1 to iters) {

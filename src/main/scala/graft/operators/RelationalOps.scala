@@ -386,7 +386,8 @@ object RelationalOps {
                           pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20,
                           smallGraphEdges: Long = 200000L): DataFrame = {
-    val p = pairs.select(col(aCol).as("a"), col(bCol).as("b")).cache()
+    val p = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
+      .filter(GraphOps.bothEnds("a", "b")).cache()
     // Adaptive small-graph path — the same decision AQE makes when it
     // swaps a shuffle join for a broadcast: once the near-dup PAIR
     // GRAPH (not the corpus!) fits comfortably on the driver
@@ -410,12 +411,7 @@ object RelationalOps {
            org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
       case _ => false
     }
-    // gate count is limit-bounded: deciding "≤ 200k edges?" must never
-    // cost a full scan of a huge pair set (the answer is the same once
-    // the limit row count is exceeded)
-    val edgeCount =
-      if (integralId) p.limit(smallGraphEdges.toInt + 1).count() else Long.MaxValue
-    if (edgeCount <= smallGraphEdges) {
+    if (integralId && GraphOps.fitsOnDriver(p, smallGraphEdges)) {
       val out = driverUnionFindLabels(nodes, idCol, p, idType)
       p.unpersist()
       return out
@@ -546,18 +542,15 @@ object RelationalOps {
     // 18-edge nation graph. Distributed contraction remains the plan
     // whenever the edge count clears the threshold.
     locally {
-      val p0 = pairs.select(col(aCol).as("a"), col(bCol).as("b")).cache()
+      val p0 = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
+        .filter(GraphOps.bothEnds("a", "b")).cache()
       val idType = nodes.schema(idCol).dataType
       val integralId = idType match {
         case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
              org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
         case _ => false
       }
-      val edgeCount =
-        if (integralId && smallGraphEdges > 0)
-          p0.limit(smallGraphEdges.toInt + 1).count()
-        else Long.MaxValue
-      if (edgeCount <= smallGraphEdges) {
+      if (integralId && GraphOps.fitsOnDriver(p0, smallGraphEdges)) {
         val out = driverUnionFindLabels(nodes, idCol, p0, idType)
         p0.unpersist()
         return out

@@ -15,17 +15,22 @@ import graft.functions.Aqi
   *     desc so the LATEST extraction wins, documented deviation
   *     SURVEY §7.4-2)
   *   - pinned pivot values (one pass, stable schema, §7.4-1)
-  *   - broadcast dim join (J1)
+  *   - location dim folded into the fact aggregate, no join (J1)
   *   - dynamic partition overwrite instead of blind append (idempotent
   *     re-runs, §7.4-3)
   *   - optional AQI columns (§2.10) — codegen'd, no UDF
   *
-  * At 100 TB: the only wide shuffles are the dedup window and the
-  * pivot aggregate, both keyed by (location_id, datetime) — co-
-  * partitioned, so AQE collapses them into one exchange reuse; the dim
-  * join broadcasts; the write is partitioned by date with AQE file
-  * coalescing (no reference-style repartition("location_id") small
-  * files).
+  * At 100 TB: [[transform]] runs as ONE scan and ONE shuffle.
+  * [[martRows]] hash-partitions the parsed rows on `location_id`, and
+  * a single sort-based aggregate on the mart key picks each pinned
+  * pollutant's freshest reading (the dedup), pivots it, and carries a
+  * metadata candidate that one window over the same partitioning
+  * (already sorted, no second sort) turns into the location dim. No
+  * dim join, so no broadcast and no size gate; the write is
+  * partitioned by date with AQE file coalescing (no reference-style
+  * repartition("location_id") small files). The separate stages
+  * (dedup window, pivot, dim window, dim join) stay as the reference
+  * formulation `martRows` is parity-tested against.
   */
 object AqPipeline {
 
@@ -168,9 +173,12 @@ object AqPipeline {
     * finding on the events-shaped twin).
     */
   def enrich(facts: DataFrame, dim: DataFrame): DataFrame =
-    facts.join(graft.operators.RelationalOps.broadcastIfFits(dim),
-        Seq("location_id"), "left")
-      .na.fill(Map("city_name" -> "Unknown", "country_code" -> "VN"))
+    fillDimDefaults(facts.join(graft.operators.RelationalOps.broadcastIfFits(dim),
+        Seq("location_id"), "left"))
+
+  /** P8 — the reference's defaults for missing location metadata. */
+  private def fillDimDefaults(df: DataFrame): DataFrame =
+    df.na.fill(Map("city_name" -> "Unknown", "country_code" -> "VN"))
       .na.fill(Map("latitude" -> 0.0, "longitude" -> 0.0))
 
   /** §2.10 — append AQI columns (overall AQI = max over per-pollutant
@@ -205,19 +213,64 @@ object AqPipeline {
       .withColumn("dominant_pollutant", Aqi.dominantPollutant(byPollutant: _*))
   }
 
+  /** W1 + A1 + P1/P7 + J1 + P8 in one keyed aggregate: parsed
+    * long-format rows (the output of [[parseTimestamps]]) → mart rows in
+    * the golden column order. Row for row the same as
+    * `enrich(pivotParameters(deduplicate(p)), locationDim(p))` with the
+    * mart select, from one scan of `p`:
+    *
+    *   - one hash exchange on `location_id`;
+    *   - one sort-based aggregate on the mart key. Each pollutant column
+    *     is `max_by(value, …)` under [[deduplicate]]'s order
+    *     (`extracted_at DESC NULLS LAST, sensor_id ASC NULLS FIRST`), so
+    *     it is the dedup survivor's value (a fresher null wins, as
+    *     there). The same aggregate keeps the key's best metadata
+    *     candidate under [[locationDim]]'s order (`… sensor_id ASC
+    *     NULLS LAST`);
+    *   - `max(candidate) OVER (PARTITION BY location_id)`: the
+    *     per-location dim, over rows the aggregate already left
+    *     partitioned and sorted by location;
+    *   - [[enrich]]'s default fill. A null `location_id` gets the
+    *     defaults, as the left join gives it.
+    *
+    * Orders are encoded as struct keys, compared field by field with
+    * nulls lowest: `extracted_at` (a null loses), `sensor_id IS NULL`
+    * (a null wins the dedup tie-break), and `~sensor_id`, which reverses
+    * the id order without the overflow of negation. `+ 0.0` turns a
+    * picked `-0.0` into `0.0`, as the pivot's `avg` does, so the mart
+    * bytes match. The streaming batch's upstream dedup leaves one row
+    * per key and parameter, so there too the pick equals the `avg`.
+    */
+  def martRows(parsed: DataFrame): DataFrame = {
+    val smallerSensor = bitwise_not(col("sensor_id")) // higher for a smaller id
+    val dedupKey = struct(col("extracted_at"), col("sensor_id").isNull, smallerSensor)
+    val dimKey = struct(col("extracted_at"), smallerSensor)
+    val pollutants = AqSchemas.parameters.map(p =>
+      (max_by(col("value"), when(col("parameter") === p, dedupKey)) + lit(0.0)).as(p))
+    val meta = struct(
+      col("city").cast("string").as("city_name"),
+      col("country").cast("string").as("country_code"),
+      col("latitude").cast("double").as("latitude"),
+      col("longitude").cast("double").as("longitude"))
+    val candidate = max(struct(dimKey.as("k"), meta.as("m"))).as("__dim")
+    val keyed = parsed.repartition(col("location_id"))
+      .groupBy("location_id", "datetime", "year", "month", "day")
+      .agg(pollutants.head, (pollutants.tail :+ candidate): _*)
+      .withColumn("__dim", max(col("__dim")).over(Window.partitionBy("location_id")))
+    def dim(c: String) = when(col("location_id").isNotNull, col(s"__dim.m.$c")).as(c)
+    fillDimDefaults(keyed.select(
+      Seq(col("location_id").cast("string").as("location_id"), col("datetime")) ++
+        AqSchemas.parameters.map(col) ++
+        Seq(dim("city_name"), dim("country_code"), dim("latitude"), dim("longitude"),
+          col("year"), col("month"), col("day")): _*))
+  }
+
   /** Full transform chain (SURVEY §3.2), raw long-format → golden mart
     * column order.
     */
   def transform(raw: DataFrame, aqi: Boolean = false): DataFrame = {
-    val parsed = parseTimestamps(raw)
-    val wide = pivotParameters(deduplicate(parsed))
-    val enriched = enrich(wide, locationDim(parsed))
-    val ordered = enriched.select(
-      Seq(col("location_id").cast("string").as("location_id"), col("datetime")) ++
-        AqSchemas.parameters.map(col) ++
-        Seq(col("city_name"), col("country_code"), col("latitude"),
-          col("longitude"), col("year"), col("month"), col("day")): _*)
-    if (aqi) withAqi(ordered) else ordered
+    val mart = martRows(parseTimestamps(raw))
+    if (aqi) withAqi(mart) else mart
   }
 
   /** K1 — partitioned parquet sink, idempotent per partition: dynamic

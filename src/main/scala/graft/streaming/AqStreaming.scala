@@ -112,9 +112,9 @@ object AqStreaming {
         col("parameter"), col("avg_value"), col("n"))
 
   /** End-to-end streaming pipeline: micro-batches run the SAME batch
-    * transform (pivot needs a full group view, so it runs per
-    * micro-batch inside foreachBatch) and APPEND to the partitioned
-    * mart.
+    * stage, [[AqPipeline.martRows]] (pivot needs a full group view, so
+    * it runs per micro-batch inside foreachBatch), and APPEND to the
+    * partitioned mart.
     *
     * Append, not the batch path's dynamic partition overwrite: a
     * micro-batch holds only the files that arrived since the last
@@ -143,23 +143,14 @@ object AqStreaming {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // three consumers of the same files (isEmpty probe, fact pivot,
-        // dim extraction) — persist so the NDJSON parses once per
-        // trigger, not three times (same reason readRawQuarantine caches)
+        // two consumers of the same files (isEmpty probe, martRows) —
+        // persist so the NDJSON parses once per trigger, not twice
+        // (same reason readRawQuarantine caches)
         batch.persist()
         try {
-          if (!batch.isEmpty) {
-            val wide = AqPipeline.enrich(
-              AqPipeline.pivotParameters(batch),
-              AqPipeline.locationDim(batch))
-            val ordered = wide.select(
-              Seq(col("location_id").cast("string").as("location_id"), col("datetime")) ++
-                AqSchemas.parameters.map(col) ++
-                Seq(col("city_name"), col("country_code"), col("latitude"),
-                  col("longitude"), col("year"), col("month"), col("day")): _*)
-            ordered.write.mode("append")
+          if (!batch.isEmpty)
+            AqPipeline.martRows(batch).write.mode("append")
               .partitionBy("year", "month", "day").parquet(martPath)
-          }
         } finally { batch.unpersist(); () }
       }
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GraphOpsSpec extends SparkSpec {
@@ -86,6 +87,46 @@ class GraphOpsSpec extends SparkSpec {
     val b2 = GraphOps.bfs(e2, "src", "dst", 0L, 4, smallGraphEdges = 0)
       .as[(Long, Long)].collect().toMap
     assert(b1 == b2)
+  }
+
+  /** Every graph operator with a driver path, on one edge list, with
+    * the small-graph bound set to `bound`.
+    */
+  private def allPaths(edges: DataFrame, bound: Long): Seq[Set[(Any, Any)]] = {
+    def pairs(df: DataFrame) = df.collect().map(r => (r.get(0), r.get(1))).toSet
+    // the nodes of the edges that survive (an edge with a null end does not)
+    val kept = edges.filter(col("src").isNotNull && col("dst").isNotNull)
+    val nodes = kept.select(col("src").as("id")).union(kept.select(col("dst").as("id")))
+      .distinct()
+    val rounded = GraphOps.pageRank(edges, "src", "dst", "w", nodes.count(), iters = 4,
+      smallGraphEdges = bound).select(col("n"), round(col("rank"), 10))
+    Seq(pairs(rounded),
+      pairs(GraphOps.bfs(edges, "src", "dst", 1L, 4, smallGraphEdges = bound)),
+      pairs(RelationalOps.connectedComponents(nodes, "id", edges, "src", "dst",
+        smallGraphEdges = bound)),
+      pairs(RelationalOps.connectedComponentsStar(nodes, "id", edges, "src", "dst",
+        smallGraphEdges = bound)))
+  }
+
+  private val someEdges = Seq((1, 2, 1.0), (2, 3, 2.0), (3, 1, 1.0), (4, 5, 1.0), (3, 6, 0.5))
+
+  test("small-graph gate: a bound of 2^31 or more neither overflows nor changes the answer") {
+    val df = someEdges.toDF("src", "dst", "w")
+    val distributed = allPaths(df, bound = 0L)
+    // Int.MaxValue + 1 used to wrap the gate's limit to a negative row count
+    assert(allPaths(df, bound = Int.MaxValue.toLong + 1) == distributed)
+    assert(allPaths(df, bound = Long.MaxValue) == distributed)
+    assert(allPaths(df, bound = Int.MaxValue.toLong) == distributed)
+  }
+
+  test("null src/dst: both sides of the gate drop the edge instead of failing") {
+    val es = someEdges.map { case (s, d, w) => (Option(s), Option(d), w) } ++
+      Seq((None, Some(1), 1.0), (Some(2), None, 1.0), (None, None, 1.0), (Some(7), None, 1.0))
+    val dirty = es.toDF("src", "dst", "w")
+    val driver = allPaths(dirty, bound = 200000L) // used to throw a NullPointerException
+    assert(driver == allPaths(dirty, bound = 0L))
+    // and the answer is the clean graph's: a null-ended edge is no edge
+    assert(driver == allPaths(someEdges.toDF("src", "dst", "w"), bound = 0L))
   }
 
   private def tris(edges: Seq[(Int, Int)]): Map[Int, Long] =
