@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR; a full-detail JSON line followed by a compact
   * final JSON line (the driver's stdout tail keeps ~2000 chars, so the
@@ -28,20 +26,7 @@ object Bench {
     // Same session wiring as Verify: the bench must measure the SAME
     // engine the correctness gate checks (k20_approx_rewrite requires
     // the injected optimizer rules and fails loudly without them).
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // no-fork local FS (graft.io.NioLocalFileSystem scaladoc): Hadoop's
-      // shell-backed chmod/readlink forks a process per created file /
-      // checkpoint rename when libhadoop is absent — java.nio instead
-      .config("spark.hadoop.fs.file.impl", "graft.io.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.io.NioLocalFs")
-      .getOrCreate()
-    GraftExtensions.assertWired(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftExtensions.session(s"local[$cpus]", cpus.toInt)
 
     def materialize(name: String, dir: String): Unit =
       SparkEntry.queries(name)(spark, dir)

@@ -10,8 +10,7 @@ import org.apache.spark.sql.graftx.{DamerauLevenshtein, FloatVecDot, JaroSimilar
   * from the first query. Wire-up:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)           // programmatic
+  * GraftExtensions.session("local[8]", 8)           // programmatic
   * // or: --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
   */
@@ -87,8 +86,8 @@ object GraftExtensions {
     * `withExtensions(...)` on `getOrCreate()` is silently IGNORED when
     * a session already exists in the JVM (e.g. a reused sbt shell) —
     * the bench/verify mains would then measure a different engine than
-    * the one the correctness gate checks. Every main that builds its
-    * session via getOrCreate() calls this right after.
+    * the one the correctness gate checks. [[session]] calls this on
+    * every session it returns.
     */
   def assertWired(spark: SparkSession): Unit =
     require(spark.sessionState.functionRegistry
@@ -97,18 +96,30 @@ object GraftExtensions {
         "session was reused and withExtensions() was ignored. Stop the " +
         "stale session or build via GraftExtensions.session().")
 
-  /** Convenience builder for a fully-wired session. */
-  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
-    val s = SparkSession.builder()
+  /** The one place a graft session is built: extensions (asserted),
+    * UTC session time zone, no UI, the no-fork local filesystem and
+    * WARN logging, plus the caller's own `extraConf`.
+    *
+    * The local filesystem pair (graft.io.NioLocalFileSystem scaladoc):
+    * Hadoop's shell-backed chmod/readlink forks a process per created
+    * file and checkpoint rename when libhadoop is absent; java.nio does
+    * the same without one.
+    */
+  def session(master: String, shufflePartitions: Int,
+              extraConf: (String, String)*): SparkSession = {
+    val b = SparkSession.builder()
       .master(master)
       .appName("graft")
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.hadoop.fs.file.impl", "graft.io.NioLocalFileSystem")
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.io.NioLocalFs")
+    extraConf.foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
     assertWired(s)
+    s.sparkContext.setLogLevel("WARN")
     s
   }
 }

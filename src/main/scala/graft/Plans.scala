@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Physical-plan audit: dumps `explain("formatted")` for a set of
   * plan-shape-critical queries so scan pushdown, broadcast selection,
@@ -91,14 +90,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.assertWired(spark)
+    val spark = GraftExtensions.session("local[8]", 8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.SimilarityOps
 
 /** Measure ANN/near-dup recall of the shipped LSH geometry against
@@ -14,13 +13,7 @@ object RecallCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftExtensions.session(s"local[$cpus]", cpus.toInt)
     import spark.implicits._
 
     val emb = Tables.load(spark, sfDir, "embeddings")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.BooleanType
 
 /** Empirical scaling comparator: times the same queries at two data
@@ -44,15 +43,7 @@ object ScaleBench {
     // shrinks as partitions grow) — the constrained-memory sweep uses
     // this to measure how much spill the standard knob recovers.
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // same engine Verify checks
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.assertWired(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftExtensions.session(s"local[$cpus]", parts.toInt)
 
     def clearState(): Unit = {
       spark.sparkContext.getPersistentRDDs.values

@@ -1,24 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local mirror of the driver's t1 smoke: run `SparkEntry.entry` on
   * sf0.001 and assert rows > 0.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // no-fork local FS (graft.io.NioLocalFileSystem scaladoc): Hadoop's
-      // shell-backed chmod/readlink forks a process per created file /
-      // checkpoint rename when libhadoop is absent — java.nio instead
-      .config("spark.hadoop.fs.file.impl", "graft.io.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.io.NioLocalFs")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftExtensions.session("local[8]", 8)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"ENTRY_ROWS=$n")

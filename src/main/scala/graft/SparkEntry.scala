@@ -25,8 +25,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     PipelineQueries.martPipeline(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2 (built once). */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     packs.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -22,20 +21,7 @@ object Verify {
     // iterate-on-a-few loop; the driver always calls with two args)
     val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(",").toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // no-fork local FS (graft.io.NioLocalFileSystem scaladoc): Hadoop's
-      // shell-backed chmod/readlink forks a process per created file /
-      // checkpoint rename when libhadoop is absent — java.nio instead
-      .config("spark.hadoop.fs.file.impl", "graft.io.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.io.NioLocalFs")
-      .getOrCreate()
-    GraftExtensions.assertWired(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftExtensions.session(s"local[$cpus]", cpus.toInt)
     new java.io.File(outDir).mkdirs()
 
     val pool = Executors.newFixedThreadPool(4)

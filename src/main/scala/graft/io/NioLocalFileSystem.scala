@@ -14,7 +14,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * (fork+exec of `chmod`, `readlink`, `ls -ld`, `stat`) for permission
   * and link-status operations whenever the libhadoop native library is
   * absent — which it is in this image (`hadoop-client-api` ships no
-  * `libhadoop.so`). Measured impact (r14, thread dumps + StageProfile):
+  * `libhadoop.so`). Measured impact (r14, thread dumps + a per-stage profile):
   * every created file — each parquet part file AND its `.crc` twin,
   * every streaming state-store delta — pays one `chmod` fork in
   * `LocalFSFileOutputStream.<init>`, and the FileContext rename path

@@ -53,7 +53,7 @@ object GraphOps {
     // O(entities²) regardless of corpus size) fits on the driver, the
     // whole iteration is driver arithmetic over a few-KB rank vector,
     // and the distributed loop's ~7 jobs/iteration of scheduling is
-    // pure overhead (r14 JobProfile: gr_pagerank spent 39 jobs +
+    // pure overhead (r14 job profile: gr_pagerank spent 39 jobs +
     // 2 s of driver gaps ranking 25 nodes). Same dataflow, fixed
     // deterministic summation order; rank values agree with the
     // distributed path to fp-reorder noise (~1e-15 relative), orders
@@ -120,6 +120,13 @@ object GraphOps {
     * body of [[pageRank]]. `None` when ineligible (non-integral node
     * ids or edge count above the bound; the gate count is
     * limit-bounded so deciding never scans a huge edge set).
+    *
+    * Weights follow the distributed path's SQL semantics: a null
+    * weight adds nothing to its source's out-weight or to any rank
+    * (a source whose weights are all null is dangling). A source
+    * whose out-weights sum to 0 is also `None`: what `w / 0` means
+    * (null without ANSI, a DIVIDE_BY_ZERO error with it) is Spark's
+    * `Divide` to decide, so the distributed loop answers that graph.
     */
   private def smallPageRank(e: DataFrame, nNodes: Long, damping: Double,
                             iters: Int, smallGraphEdges: Long)
@@ -132,13 +139,15 @@ object GraphOps {
     val integral = Seq(e.schema("src").dataType, e.schema("dst").dataType)
       .forall(t => Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains(t))
     if (!integral || !fitsOnDriver(e, smallGraphEdges)) return None
-    val rows = e.select(col("src").cast("long"), col("dst").cast("long"), col("w"))
+    val all = e.select(col("src").cast("long"), col("dst").cast("long"), col("w"))
       .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .map(r => (r.getLong(0), r.getLong(1), r.get(2)))
       .sortBy(t => (t._1, t._2)) // fixed, deterministic summation order
-    val nodes = (rows.map(_._1) ++ rows.map(_._2)).distinct.sorted
+    val nodes = (all.map(_._1) ++ all.map(_._2)).distinct.sorted
+    val rows = all.collect { case (s, d, w: Double) => (s, d, w) }
     val outW = scala.collection.mutable.HashMap.empty[Long, Double]
     rows.foreach { case (s, _, w) => outW(s) = outW.getOrElse(s, 0.0) + w }
+    if (outW.values.exists(_ == 0.0)) return None
     var rank = nodes.map(n => n -> 1.0 / nNodes).toMap
     for (_ <- 1 to iters) {
       val dm = nodes.iterator.filter(n => !outW.contains(n)).map(rank).sum

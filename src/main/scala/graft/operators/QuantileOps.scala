@@ -64,8 +64,10 @@ import org.apache.spark.sql.types._
   * result is replay-identical (ReplayStabilitySpec sweeps it).
   *
   * NaN values are rejected (one `isnan` guard in the stats scan);
-  * nulls are ignored like both reference engines; an all-null/empty
-  * group yields a null quantile array.
+  * null values are ignored like both reference engines; an
+  * all-null/empty group yields a null quantile array. A null GROUP is
+  * a group like any other (as in `groupBy`): the interval joins match
+  * it null-safely (`<=>`).
   */
 object QuantileOps {
 
@@ -215,7 +217,7 @@ object QuantileOps {
               .cast(IntegerType)))
         .otherwise(lit(0))
       val hist = base.join(broadcast(intDf),
-          col("__g") === col("__ig") &&
+          col("__g") <=> col("__ig") &&
             col("__v") >= col("lo") && col("__v") <= col("hi"))
         .groupBy(col("iid"), b.as("__b"))
         .agg(count(lit(1)).as("c"), min("__v").as("bmn"), max("__v").as("bmx"))
@@ -264,7 +266,7 @@ object QuantileOps {
         StructType(Seq(StructField("__ig", groupType), StructField("lo", DoubleType),
           StructField("hi", DoubleType), StructField("iid", IntegerType))))
       val vals = base.join(broadcast(intDf),
-          col("__g") === col("__ig") &&
+          col("__g") <=> col("__ig") &&
             col("__v") >= col("lo") && col("__v") <= col("hi"))
         .select(col("iid"), col("__v")).collect()
         .groupBy(_.getInt(0))
@@ -399,7 +401,7 @@ object QuantileOps {
               .cast(IntegerType)))
         .otherwise(lit(0))
       val hist = raw.join(broadcast(intDf),
-          col("__g") === col("__ig") &&
+          col("__g") <=> col("__ig") &&
             col("__v") >= col("lo") && col("__v") <= col("hi"))
         .groupBy(col("iid"), b.as("__b"))
         .agg(sum("__w").as("wsum"), count(lit(1)).as("c"),
@@ -450,7 +452,7 @@ object QuantileOps {
         StructType(Seq(StructField("__ig", groupType), StructField("lo", DoubleType),
           StructField("hi", DoubleType), StructField("iid", IntegerType))))
       val vals = raw.join(broadcast(intDf),
-          col("__g") === col("__ig") &&
+          col("__g") <=> col("__ig") &&
             col("__v") >= col("lo") && col("__v") <= col("hi"))
         .select(col("iid"), col("__v"), col("__w")).collect()
         .groupBy(_.getInt(0))

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.SparkSession
 import graft.streaming.AqStreaming
 
 /** Runnable end-to-end demo of the air-quality engine — the flow a
@@ -15,13 +14,7 @@ import graft.streaming.AqStreaming
   */
 object AqDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftExtensions.session("local[8]", 8)
 
     val raw: Path = Files.createTempDirectory("aq_demo_raw")
     val mart = Files.createTempDirectory("aq_demo_mart").toString

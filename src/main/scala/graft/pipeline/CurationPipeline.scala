@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.{DedupOps, QualityOps, RelationalOps}
@@ -146,14 +146,7 @@ object CurationPipeline {
       round(avg("quality"), 4).as("mean_quality"))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftExtensions.assertWired(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftExtensions.session("local[8]", 8)
     val docs = graft.Tables.load(spark, "/root/testdata/sf0.01", "documents")
     val out = java.nio.file.Files.createTempDirectory("curated").toString
     val curated = curate(docs)

@@ -1438,33 +1438,23 @@ object CoreQueries extends QueryPack {
       |WHERE o_orderpriority = '1-URGENT'
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-    val saved = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> s.conf.getOption(k))
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+    // the confs go on a fresh session: the returned frame plans and
+    // runs under them, and the caller's shared session never sees them
+    val bloom = s.newSession()
+    bloom.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    bloom.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
     // the injector only fires for joins that cannot broadcast by size
     // (a broadcast join needs no runtime filter) — disabling auto-
     // broadcast reproduces the 100 TB build-side shape at test scale
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val urgent = Tables.load(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-      // eager localCheckpoint materializes UNDER these confs — plans
-      // resolve lazily, so restoring first would undo the injection
-      Tables.load(s, dir, "lineitem")
-        .join(urgent, col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_items"),
-          r2(sum("l_extendedprice")).as("sum_price"))
-        .orderBy("o_orderpriority")
-        .localCheckpoint()
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
+    bloom.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val urgent = Tables.load(bloom, dir, "orders")
+      .filter(col("o_orderpriority") === "1-URGENT")
+    Tables.load(bloom, dir, "lineitem")
+      .join(urgent, col("l_orderkey") === col("o_orderkey"))
+      .groupBy("o_orderpriority")
+      .agg(count(lit(1)).as("n_items"),
+        r2(sum("l_extendedprice")).as("sum_price"))
+      .orderBy("o_orderpriority")
   }
 
   // J9 — salted skew join (engine extra): the forced-layout answer to

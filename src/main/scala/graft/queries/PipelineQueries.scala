@@ -2747,17 +2747,17 @@ object PipelineQueries extends QueryPack {
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
           .start(), 300000, label)
-        // run 1: only batch 1 exists; AvailableNow drains it and the
-        // query TERMINATES — open sessions now live only in the
-        // checkpoint's state store files.
-        stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
-        runOnce("st_restart_parity stream run 1")
-        // run 2: a NEW query (fresh StreamingQuery id incarnation, same
-        // checkpoint) must resume past b1 via the offset log and restore
-        // per-user state from disk before folding in batch 2.
-        stageFile(ev.filter(col("ts") > cutoff).unionByName(sentinels),
-          stage, "b2.parquet", 2000000L)
-        runOnce("st_restart_parity stream run 2")
+      // run 1: only batch 1 exists; AvailableNow drains it and the
+      // query TERMINATES — open sessions now live only in the
+      // checkpoint's state store files.
+      stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
+      runOnce("st_restart_parity stream run 1")
+      // run 2: a NEW query (fresh StreamingQuery id incarnation, same
+      // checkpoint) must resume past b1 via the offset log and restore
+      // per-user state from disk before folding in batch 2.
+      stageFile(ev.filter(col("ts") > cutoff).unionByName(sentinels),
+        stage, "b2.parquet", 2000000L)
+      runOnce("st_restart_parity stream run 2")
     }
     s.read.parquet(outDir)
       .select(col("user_id"), col("session_start"), col("session_end"),
@@ -2979,18 +2979,18 @@ object PipelineQueries extends QueryPack {
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
           .start(), 300000, label)
-        // run 1: batch 1 only (both sides ≤ cutoff); on termination every
-        // still-joinable row sits solely in the symmetric join state
-        stageFile(causes.filter(col("ts") <= cutoff), cStage, "b1.parquet", 1000000L)
-        stageFile(effects.filter(col("ts") <= cutoff), eStage, "b1.parquet", 1000000L)
-        runOnce("st_join_restart_parity stream run 1")
-        // run 2: a NEW query on the same checkpoint folds in batch 2 +
-        // the far-future heartbeats that close every remaining window
-        stageFile(causes.filter(col("ts") > cutoff).unionByName(heartbeat),
-          cStage, "b2.parquet", 2000000L)
-        stageFile(effects.filter(col("ts") > cutoff).unionByName(heartbeat),
-          eStage, "b2.parquet", 2000000L)
-        runOnce("st_join_restart_parity stream run 2")
+      // run 1: batch 1 only (both sides ≤ cutoff); on termination every
+      // still-joinable row sits solely in the symmetric join state
+      stageFile(causes.filter(col("ts") <= cutoff), cStage, "b1.parquet", 1000000L)
+      stageFile(effects.filter(col("ts") <= cutoff), eStage, "b1.parquet", 1000000L)
+      runOnce("st_join_restart_parity stream run 1")
+      // run 2: a NEW query on the same checkpoint folds in batch 2 +
+      // the far-future heartbeats that close every remaining window
+      stageFile(causes.filter(col("ts") > cutoff).unionByName(heartbeat),
+        cStage, "b2.parquet", 2000000L)
+      stageFile(effects.filter(col("ts") > cutoff).unionByName(heartbeat),
+        eStage, "b2.parquet", 2000000L)
+      runOnce("st_join_restart_parity stream run 2")
     }
     s.read.parquet(outDir)
       .filter(col("user_id") >= 0) // drop the two heartbeats' self-pair
@@ -3034,16 +3034,14 @@ object PipelineQueries extends QueryPack {
   // windowed-agg × restart × RocksDB combination inside the oracle
   // gate so a provider-specific recovery regression turns a
   // CORRECTNESS row red rather than only a probe line.
+  // The provider is set on a fresh session, not the caller's: rows
+  // run concurrently on one shared session (Verify), and a borrowed
+  // conf would be visible to every row running alongside this one.
   q("st_restart_agg_rocksdb_parity", restartAggOracle) { (s, dir) =>
-    val conf = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(conf)
-    s.conf.set(conf,
+    val rocks = s.newSession()
+    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try restartAggParity(s, dir, "st_restart_agg_rocksdb_parity", "raggrdb")
-    finally prev match {
-      case Some(v) => s.conf.set(conf, v)
-      case None => s.conf.unset(conf)
-    }
+    restartAggParity(rocks, dir, "st_restart_agg_rocksdb_parity", "raggrdb")
   }
 
   private def restartAggParity(s: SparkSession, dir: String,
@@ -3073,11 +3071,11 @@ object PipelineQueries extends QueryPack {
             .outputMode("append")
             .trigger(Trigger.AvailableNow())
             .start(), 300000, label)
-        stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
-        runOnce(s"$label stream run 1")
-        stageFile(ev.filter(col("ts") > cutoff).unionByName(heartbeat),
-          stage, "b2.parquet", 2000000L)
-        runOnce(s"$label stream run 2")
+      stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
+      runOnce(s"$label stream run 1")
+      stageFile(ev.filter(col("ts") > cutoff).unionByName(heartbeat),
+        stage, "b2.parquet", 2000000L)
+      runOnce(s"$label stream run 2")
     }
     s.read.parquet(outDir)
       .filter(col("event_type") =!= "hb") // belt-and-braces: never emits

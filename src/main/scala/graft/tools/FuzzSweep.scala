@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 
 import graft.queries.QueryFuzz
 
@@ -34,14 +33,7 @@ object FuzzSweep {
     val outDir = args(2)
     val nSeeds = if (args.length > 3) args(3).toInt else 100
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", cpus.toInt)
     new java.io.File(outDir).mkdirs()
 
     val sqls = Seq.newBuilder[(String, String)]

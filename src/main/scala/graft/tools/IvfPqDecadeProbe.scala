@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.SimilarityOps
@@ -49,21 +48,14 @@ object IvfPqDecadeProbe {
     val filteredMode = args.length > 1 && args(1) == "filtered"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftExtensions.assertWired(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", parts.toInt)
     def r3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
     val (dim, m, ksub) = (64, 16, 32)
-    // see AssignProbe: measure the loop, not the stress set's file
-    // count — a cluster scan is thousands of splits
+    // repartition to the core count: a map-only pass inherits scan
+    // splits, and a stress set is a handful of files where a cluster
+    // scan is thousands — measure the loop, not the file count
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .repartition(cpus.toInt).localCheckpoint()

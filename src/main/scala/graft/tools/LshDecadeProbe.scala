@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.SimilarityOps
@@ -48,15 +47,7 @@ object LshDecadeProbe {
     val bound = if (args.length > 2) Some(args(2).toLong) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftExtensions.assertWired(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", parts.toInt)
     bound.foreach(b =>
       spark.conf.set("spark.graft.lsh.broadcastVerifyBound", b.toString))
     def r3(v: Double): String =

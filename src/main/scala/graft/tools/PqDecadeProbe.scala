@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.SimilarityOps
@@ -31,15 +30,7 @@ object PqDecadeProbe {
     val dir = if (args.nonEmpty) args(0) else "/tmp/stress/sf1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftExtensions.assertWired(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", parts.toInt)
     def r3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Output-file hygiene of the partitioned sinks — the reference's own
@@ -47,15 +47,7 @@ object SinkHygieneProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/tmp/stress/sf10"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftExtensions.assertWired(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", cpus.toInt)
 
     def r1(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Stateful parity on the PRODUCTION state backend: the four
   * `st_*restart*` rows prove checkpoint-restart for all four stateful
@@ -62,15 +62,7 @@ object StateBackendProbe {
     val names = if (args.length > 1) args(1).split(",").toSeq.map(_.trim)
                 else RESTART_ROWS
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftExtensions.assertWired(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", cpus.toInt)
     def r1(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
 

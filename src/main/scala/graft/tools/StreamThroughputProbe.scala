@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -40,18 +40,11 @@ object StreamThroughputProbe {
     val provider = if (args.length > 2) args(2) else "default"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (provider == "rocksdb") builder.config(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    graft.GraftExtensions.assertWired(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val rocksdb =
+      if (provider == "rocksdb") Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", parts.toInt, rocksdb: _*)
     import spark.implicits._
 
     val ev = graft.Tables.load(spark, dir, "events")

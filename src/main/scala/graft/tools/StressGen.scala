@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Local stress-set generator: the driver's largest testdata is sf0.1
@@ -90,13 +90,7 @@ object StressGen {
     // throughput/state-backend sweeps read only events).
     val eventsOnly = modes("eventsonly")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", cpus.toInt)
     def n(base: Long): Long = (base * mult).toLong
 
     def write(df: DataFrame, name: String, parts: Int): Unit =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.SimilarityOps
@@ -62,15 +61,7 @@ object VecSkewProbe {
     // 32 partitions under a 24 g heap). Same env knob as the decade
     // probes.
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftExtensions.assertWired(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", parts.toInt)
 
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))

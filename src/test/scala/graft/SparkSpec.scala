@@ -7,29 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * Spark session startup dominates test wall-time otherwise).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      // local[4, 2]: allow ONE task retry — normal runs never fail a
-      // task, but TaskRetrySpec injects first-attempt failures to pin
-      // retry determinism, and local's default maxFailures=1 would
-      // fail the whole job instead of re-attempting the task
-      .master("local[4, 2]")
-      .appName("graft-tests")
-      .withExtensions(new GraftExtensions) // dogfood the extension wiring
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // no-fork local FS (graft.io.NioLocalFileSystem scaladoc): Hadoop's
-      // shell-backed chmod/readlink forks a process per created file /
-      // checkpoint rename when libhadoop is absent — java.nio instead
-      .config("spark.hadoop.fs.file.impl", "graft.io.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.io.NioLocalFs")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[4, 2]: allow ONE task retry — normal runs never fail a task,
+  // but TaskRetrySpec injects first-attempt failures to pin retry
+  // determinism, and local's default maxFailures=1 would fail the whole
+  // job instead of re-attempting the task
+  lazy val spark: SparkSession = GraftExtensions.session("local[4, 2]", 4,
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -129,6 +129,44 @@ class GraphOpsSpec extends SparkSpec {
     assert(driver == allPaths(someEdges.toDF("src", "dst", "w"), bound = 0L))
   }
 
+  test("pageRank weights: zero out-weight, negative and null weights agree across the gate") {
+    def both(df: DataFrame): Seq[Map[Long, Double]] = Seq(200000L, 0L).map { bound =>
+      GraphOps.pageRank(df, "src", "dst", "w", 5, iters = 5, smallGraphEdges = bound)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    }
+    def agree(df: DataFrame): Map[Long, Double] = {
+      val Seq(driver, distributed) = both(df)
+      assert(driver.keySet == distributed.keySet)
+      driver.foreach { case (k, v) =>
+        assert(!v.isNaN && !v.isInfinite, s"node $k: $v")
+        assert(math.abs(v - distributed(k)) < 1e-12, s"node $k: $v vs ${distributed(k)}")
+      }
+      driver
+    }
+    // 2 has a negative weight (out-weight 2); 4's only weight is null,
+    // so 4 is dangling
+    val signed = Seq[(Long, Long, Option[Double])]((1, 2, Some(1.0)), (2, 3, Some(3.0)),
+      (2, 1, Some(-1.0)), (3, 1, Some(1.0)), (4, 5, None), (5, 1, Some(2.0)))
+    agree(signed.toDF("src", "dst", "w"))
+    // 1's out-weights sum to 0: w / 0 is Spark's to define on both sides
+    val zero = signed ++ Seq[(Long, Long, Option[Double])]((1, 4, Some(-1.0)))
+    val lenient = spark.newSession()
+    lenient.conf.set("spark.sql.ansi.enabled", "false")
+    val ranks = agree(lenient.createDataFrame(zero).toDF("src", "dst", "w"))
+    assert(ranks.size == 5)
+    val strict = spark.newSession()
+    strict.conf.set("spark.sql.ansi.enabled", "true")
+    Seq(200000L, 0L).foreach { bound =>
+      val e = intercept[Exception] {
+        GraphOps.pageRank(strict.createDataFrame(zero).toDF("src", "dst", "w"),
+          "src", "dst", "w", 5, iters = 5, smallGraphEdges = bound).collect()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("DIVIDE_BY_ZERO")), s"bound $bound: $e")
+    }
+  }
+
   private def tris(edges: Seq[(Int, Int)]): Map[Int, Long] =
     GraphOps.triangleCount(edges.toDF("src", "dst"), "src", "dst")
       .as[(Int, Long)].collect().toMap

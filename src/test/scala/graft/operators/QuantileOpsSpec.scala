@@ -234,6 +234,27 @@ class QuantileOpsSpec extends graft.SparkSpec {
     checkWeighted(df, buckets = 8, sliceThreshold = 8)
   }
 
+  test("a null group is a group: same answer as under a non-null label, window form agrees") {
+    val raw = (1 to 600).map { i =>
+      (if (i % 3 == 0) None else Some(s"g${i % 2}"), math.cos(i * 0.3) * 50 + i * 0.01,
+        (i % 4).toLong)
+    }
+    val labelled = raw.map { case (g, v, w) => (g.getOrElse("none"), v, w) }
+    // unweighted: the null group's quantiles are those of the same rows
+    // under a non-null label (the interval joins used to drop them)
+    val got = QuantileOps.exactQuantiles(raw.map(t => (t._1, t._2)).toDF("g", "v"),
+      "g", "v", QS, buckets = 64, sliceThreshold = 16)
+    val ref = QuantileOps.exactQuantiles(labelled.map(t => (t._1, t._2)).toDF("g", "v"),
+      "g", "v", QS, buckets = 64, sliceThreshold = 16)
+    assert(got.keySet == Set[Any](null, "g0", "g1"))
+    assert(got.map { case (g, q) => Option(g).getOrElse("none") -> q } == ref)
+    // weighted: the gated bisection vs the cumulative-window form
+    val df = raw.toDF("g", "v", "w")
+    checkWeighted(df)
+    assert(QuantileOps.exactWeightedThresholdsDF(df, "g", "v", "w", WFRACS)
+      .filter(col("g").isNull).count() == 1)
+  }
+
   test("weighted thresholds reject null/NaN values and negative weights loudly") {
     val bad1 = Seq(("g", Some(1.0), 1L), ("g", None, 2L)).toDF("g", "v", "w")
     val e1 = intercept[IllegalArgumentException] {
