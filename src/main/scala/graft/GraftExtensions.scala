@@ -97,8 +97,9 @@ object GraftExtensions {
         "stale session or build via GraftExtensions.session().")
 
   /** The one place a graft session is built: extensions (asserted),
-    * UTC session time zone, no UI, the no-fork local filesystem and
-    * WARN logging, plus the caller's own `extraConf`.
+    * UTC session time zone, no UI, the no-fork local filesystem,
+    * nanos-as-long parquet timestamps and WARN logging, plus the
+    * caller's own `extraConf`.
     *
     * The local filesystem pair (graft.io.NioLocalFileSystem scaladoc):
     * Hadoop's shell-backed chmod/readlink forks a process per created
@@ -116,10 +117,36 @@ object GraftExtensions {
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", "graft.io.NioLocalFileSystem")
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.io.NioLocalFs")
+      // `events.ts` has shipped as parquet TIMESTAMP(NANOS), which the
+      // reader only accepts as a long (Tables.normalizeEventsTs)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     assertWired(s)
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The one way to scope confs to a piece of work: run `body` on a
+    * clone of `s` (the caller's current confs, temp views and functions
+    * — see [[org.apache.spark.sql.graftx.SessionClone]]) with `conf`
+    * applied, the clone being the thread's active session meanwhile.
+    * The caller's session is never changed, so queries running beside
+    * this one on it (Verify runs four at once) never see these confs.
+    * Active matters: some planning reads `SQLConf.get`, the thread's
+    * active session's conf, rather than the Dataset's — plan statistics
+    * under `spark.sql.cbo.enabled`, for one. A frame `body` returns
+    * stays bound to the clone and plans under its confs wherever it
+    * runs.
+    */
+  def isolated[T](s: SparkSession, conf: (String, String)*)(body: SparkSession => T): T = {
+    val clone = org.apache.spark.sql.graftx.SessionClone(s)
+    conf.foreach { case (k, v) => clone.conf.set(k, v) }
+    val prior = SparkSession.getActiveSession
+    SparkSession.setActiveSession(clone)
+    try body(clone) finally prior match {
+      case Some(p) => SparkSession.setActiveSession(p)
+      case None => SparkSession.clearActiveSession()
+    }
   }
 }

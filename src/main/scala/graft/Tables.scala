@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * `events.ts` has been written by the driver in different parquet
   * physical types across testdata generations — TIMESTAMP(NANOS)
   * (which Spark's reader only accepts via the nanos-as-long legacy
-  * conf) and plain timestamp[us] (which Spark reads as
-  * TIMESTAMP_NTZ). We therefore branch on the ACTUAL read schema
-  * rather than assuming one encoding:
+  * conf, set on every `GraftExtensions.session`) and plain
+  * timestamp[us] (which Spark reads as TIMESTAMP_NTZ). We therefore
+  * branch on the ACTUAL read schema rather than assuming one encoding:
   *   - LongType (nanos-as-long): exact integer `DIV 1000` to micros
   *     (a double roundtrip would corrupt epoch-nanos > 2^53) — the
   *     same truncation DuckDB applies casting TIMESTAMP_NS→TIMESTAMP.
@@ -40,10 +40,8 @@ object Tables {
     }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeEventsTs(spark.read.parquet(s"$dir/$name.parquet"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    val df = spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") normalizeEventsTs(df) else df
   }
 
   /** Register every table as a temp view so `spark.sql` queries use the

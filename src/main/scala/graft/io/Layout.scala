@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Physical data layout for scan pruning — the write-side half of
   * "filters reach the parquet scan".
@@ -274,5 +275,21 @@ object Layout {
       sum(when(col("lo") <= hi && col("hi") >= lo, 1).otherwise(0)).as("touched"),
       count(lit(1)).as("total")).head()
     row.getLong(0).toDouble / row.getLong(1).toDouble
+  }
+
+  /** Read hive-partitioned parquet at `path` with the named partition
+    * columns typed as the strings their directory names spell ("01"
+    * stays "01", not 1). The columns are declared `StringType` in the
+    * read schema; a declared partition type is taken as written
+    * (SPARK-26188), and pruning on them still works. The other columns
+    * keep their inferred types, so this lists `path` twice: once to
+    * infer, once to read.
+    */
+  def readStringPartitioned(spark: SparkSession, path: String,
+                            partitionCols: Seq[String]): DataFrame = {
+    val inferred = spark.read.parquet(path).schema
+    spark.read.schema(StructType(inferred.map(f =>
+        if (partitionCols.contains(f.name)) f.copy(dataType = StringType) else f)))
+      .parquet(path)
   }
 }

@@ -48,93 +48,85 @@ object Maintenance {
     */
   def compact(spark: SparkSession, path: String, partitionCols: Seq[String],
               targetBytes: Long = 128L * 1024 * 1024): Unit = {
+    val files = dataFiles(path)
     // partition-column values must round-trip as the literal dir-name
-    // strings for the budget join below; restore the session conf after
-    val inferenceKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val priorInference = spark.conf.getOption(inferenceKey)
-    spark.conf.set(inferenceKey, "false")
-    try {
-      val files = dataFiles(path)
-      val df = spark.read.parquet(path)
-      val tmp = path + "__compact_tmp"
-      val dataCols = df.columns.filterNot(partitionCols.contains).map(col).toSeq
-      if (partitionCols.isEmpty) {
-        val totalBytes = files.map(_.length).sum
-        val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-        df.repartition(nFiles).write.mode("overwrite").parquet(tmp)
-      } else {
-        // leaf-partition byte sizes from the listing → per-partition
-        // file budgets, joined back (broadcast: one row per partition)
-        val rootUri = new File(path).toURI
-        val budgets = files
-          .groupBy { f =>
-            rootUri.relativize(f.getParentFile.toURI).getPath
-              .split("/").filter(_.contains("="))
-              .map(seg => seg.split("=", 2)).map(kv => kv(0) -> kv(1)).toMap
-          }
-          .map { case (vals, fs) =>
-            val n = math.max(1,
-              math.ceil(fs.map(_.length).sum.toDouble / targetBytes).toInt)
-            partitionCols.map(vals.getOrElse(_,
-              sys.error(s"partition col not in layout: $vals"))) :+ n
-          }.toSeq
-        val budgetSchema = StructType(
-          partitionCols.map(StructField(_, StringType)) :+
-            StructField("__files", IntegerType))
-        val budgetDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(budgets.map(Row.fromSeq), 1), budgetSchema)
-        val nFiles = math.max(1, budgets.map(_.last.asInstanceOf[Int]).sum)
-        // Null partition values write to __HIVE_DEFAULT_PARTITION__ dirs and
-        // read back as null, while the budget table holds the literal dir
-        // string — a plain equi-join would silently drop those rows. Join on
-        // null-coalesced key columns instead so both sides carry the hive
-        // default-partition sentinel.
-        val hiveDefault = "__HIVE_DEFAULT_PARTITION__"
-        val keyCols = partitionCols.map(p => s"__pk_$p")
-        val keyed = partitionCols.zip(keyCols).foldLeft(df) { case (d, (p, k)) =>
-          d.withColumn(k, coalesce(col(p).cast(StringType), lit(hiveDefault)))
+    // strings for the budget join below
+    val df = Layout.readStringPartitioned(spark, path, partitionCols)
+    val tmp = path + "__compact_tmp"
+    val dataCols = df.columns.filterNot(partitionCols.contains).map(col).toSeq
+    if (partitionCols.isEmpty) {
+      val totalBytes = files.map(_.length).sum
+      val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+      df.repartition(nFiles).write.mode("overwrite").parquet(tmp)
+    } else {
+      // leaf-partition byte sizes from the listing → per-partition
+      // file budgets, joined back (broadcast: one row per partition)
+      val rootUri = new File(path).toURI
+      val budgets = files
+        .groupBy { f =>
+          rootUri.relativize(f.getParentFile.toURI).getPath
+            .split("/").filter(_.contains("="))
+            .map(seg => seg.split("=", 2)).map(kv => kv(0) -> kv(1)).toMap
         }
-        val budgetKeyed = partitionCols.zip(keyCols).foldLeft(budgetDf) {
-          case (d, (p, k)) => d.withColumnRenamed(p, k)
-        }
-        // a partition-cols-only table has no data columns to hash. A
-        // per-row id salt (monotonically_increasing_id) is NONdeterministic
-        // under task retry — a recomputed map task could reassign rows
-        // across shuffle partitions, duplicating or losing rows (the
-        // classic nondeterministic-repartition hazard; SPARK-23207's sort
-        // fix covers only round-robin). Such a table's rows are constant
-        // within each partition, so write each as ONE file (salt 0):
-        // deterministic, and parquet RLE collapses the constant columns
-        // to near-nothing regardless of row count.
-        val saltSrc =
-          if (dataCols.isEmpty) lit(0)
-          else hash(dataCols: _*)
-        // Left join + per-row loud failure: hive URL-escaped partition
-        // values don't round-trip as literal dir-name strings (documented
-        // unsupported above) — but compact() is a destructive rewrite, so
-        // an unmatched row must FAIL the job before the swap instead of
-        // silently vanishing from the rewritten table.
-        keyed.join(broadcast(budgetKeyed), keyCols, "left")
-          .withColumn("__files",
-            when(col("__files").isNull, raise_error(lit(
-              "compact: partition value does not round-trip as its directory name (hive-escaped values unsupported)")))
-              .otherwise(col("__files")))
-          .withColumn("__salt", pmod(saltSrc, col("__files")))
-          .repartition(nFiles, (partitionCols.map(col) :+ col("__salt")): _*)
-          .drop((keyCols :+ "__files" :+ "__salt"): _*)
-          .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp)
+        .map { case (vals, fs) =>
+          val n = math.max(1,
+            math.ceil(fs.map(_.length).sum.toDouble / targetBytes).toInt)
+          partitionCols.map(vals.getOrElse(_,
+            sys.error(s"partition col not in layout: $vals"))) :+ n
+        }.toSeq
+      val budgetSchema = StructType(
+        partitionCols.map(StructField(_, StringType)) :+
+          StructField("__files", IntegerType))
+      val budgetDf = spark.createDataFrame(
+        spark.sparkContext.parallelize(budgets.map(Row.fromSeq), 1), budgetSchema)
+      val nFiles = math.max(1, budgets.map(_.last.asInstanceOf[Int]).sum)
+      // Null partition values write to __HIVE_DEFAULT_PARTITION__ dirs and
+      // read back as null, while the budget table holds the literal dir
+      // string — a plain equi-join would silently drop those rows. Join on
+      // null-coalesced key columns instead so both sides carry the hive
+      // default-partition sentinel.
+      val hiveDefault = "__HIVE_DEFAULT_PARTITION__"
+      val keyCols = partitionCols.map(p => s"__pk_$p")
+      val keyed = partitionCols.zip(keyCols).foldLeft(df) { case (d, (p, k)) =>
+        d.withColumn(k, coalesce(col(p).cast(StringType), lit(hiveDefault)))
       }
-      val old = new File(path + "__compact_old")
-      require(new File(path).renameTo(old), s"cannot move $path aside")
-      require(new File(tmp).renameTo(new File(path)), s"cannot move $tmp into place")
-      def rm(f: File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
+      val budgetKeyed = partitionCols.zip(keyCols).foldLeft(budgetDf) {
+        case (d, (p, k)) => d.withColumnRenamed(p, k)
       }
-      rm(old)
-    } finally priorInference match {
-      case Some(v) => spark.conf.set(inferenceKey, v)
-      case None    => spark.conf.unset(inferenceKey)
+      // a partition-cols-only table has no data columns to hash. A
+      // per-row id salt (monotonically_increasing_id) is NONdeterministic
+      // under task retry — a recomputed map task could reassign rows
+      // across shuffle partitions, duplicating or losing rows (the
+      // classic nondeterministic-repartition hazard; SPARK-23207's sort
+      // fix covers only round-robin). Such a table's rows are constant
+      // within each partition, so write each as ONE file (salt 0):
+      // deterministic, and parquet RLE collapses the constant columns
+      // to near-nothing regardless of row count.
+      val saltSrc =
+        if (dataCols.isEmpty) lit(0)
+        else hash(dataCols: _*)
+      // Left join + per-row loud failure: hive URL-escaped partition
+      // values don't round-trip as literal dir-name strings (documented
+      // unsupported above) — but compact() is a destructive rewrite, so
+      // an unmatched row must FAIL the job before the swap instead of
+      // silently vanishing from the rewritten table.
+      keyed.join(broadcast(budgetKeyed), keyCols, "left")
+        .withColumn("__files",
+          when(col("__files").isNull, raise_error(lit(
+            "compact: partition value does not round-trip as its directory name (hive-escaped values unsupported)")))
+            .otherwise(col("__files")))
+        .withColumn("__salt", pmod(saltSrc, col("__files")))
+        .repartition(nFiles, (partitionCols.map(col) :+ col("__salt")): _*)
+        .drop((keyCols :+ "__files" :+ "__salt"): _*)
+        .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp)
     }
+    val old = new File(path + "__compact_old")
+    require(new File(path).renameTo(old), s"cannot move $path aside")
+    require(new File(tmp).renameTo(new File(path)), s"cannot move $tmp into place")
+    def rm(f: File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete()
+    }
+    rm(old)
   }
 }

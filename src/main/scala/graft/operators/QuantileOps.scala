@@ -283,8 +283,10 @@ object QuantileOps {
       val out: Seq[Double] =
         if (nByG(i) == 0) null
         else ranksNeeded(i).map { case (pos, rf, rc) =>
-          val vf = valueAt((i, rf))
-          if (rf == rc) vf else vf + (pos - rf) * (valueAt((i, rc)) - vf)
+          // Spark `percentile`'s own arithmetic, so results match it bit
+          // for bit (vf + (pos - rf) * (vc - vf) differs in the last bits)
+          val (vf, vc) = (valueAt((i, rf)), valueAt((i, rc)))
+          if (rf == rc || vf == vc) vf else (rc - pos) * vf + (pos - rf) * vc
         }
       groups(i) -> out
     }.toMap

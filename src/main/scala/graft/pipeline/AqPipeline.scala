@@ -327,19 +327,10 @@ object AqPipeline {
       .text(path)
 
   /** K5 — register the mart for the SQL surface (§3.3). */
-  def registerMart(spark: SparkSession, path: String, name: String): Unit = {
-    // inference off only for THIS read (year/month/day stay the
-    // zero-padded strings the mart wrote); restore the session conf so
-    // unrelated later reads keep their configured behavior
-    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try spark.read.parquet(path).createOrReplaceTempView(name)
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def registerMart(spark: SparkSession, path: String, name: String): Unit =
+    // year/month/day stay the zero-padded strings the mart wrote
+    graft.io.Layout.readStringPartitioned(spark, path, Seq("year", "month", "day"))
+      .createOrReplaceTempView(name)
 
   /** A3 — single-pass data-quality audit over the critical columns
     * (`process_openaq_raw.py:213-235`): null counts + duplicate-key

@@ -1438,23 +1438,24 @@ object CoreQueries extends QueryPack {
       |WHERE o_orderpriority = '1-URGENT'
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-    // the confs go on a fresh session: the returned frame plans and
+    // the confs go on an isolated clone: the returned frame plans and
     // runs under them, and the caller's shared session never sees them
-    val bloom = s.newSession()
-    bloom.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    bloom.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    // the injector only fires for joins that cannot broadcast by size
-    // (a broadcast join needs no runtime filter) — disabling auto-
-    // broadcast reproduces the 100 TB build-side shape at test scale
-    bloom.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val urgent = Tables.load(bloom, dir, "orders")
-      .filter(col("o_orderpriority") === "1-URGENT")
-    Tables.load(bloom, dir, "lineitem")
-      .join(urgent, col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_items"),
-        r2(sum("l_extendedprice")).as("sum_price"))
-      .orderBy("o_orderpriority")
+    graft.GraftExtensions.isolated(s,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      // the injector only fires for joins that cannot broadcast by size
+      // (a broadcast join needs no runtime filter) — disabling auto-
+      // broadcast reproduces the 100 TB build-side shape at test scale
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") { bloom =>
+      val urgent = Tables.load(bloom, dir, "orders")
+        .filter(col("o_orderpriority") === "1-URGENT")
+      Tables.load(bloom, dir, "lineitem")
+        .join(urgent, col("l_orderkey") === col("o_orderkey"))
+        .groupBy("o_orderpriority")
+        .agg(count(lit(1)).as("n_items"),
+          r2(sum("l_extendedprice")).as("sum_price"))
+        .orderBy("o_orderpriority")
+    }
   }
 
   // J9 — salted skew join (engine extra): the forced-layout answer to

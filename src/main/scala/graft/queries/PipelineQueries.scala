@@ -1,10 +1,11 @@
 package graft.queries
 
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{GraftExtensions, Tables}
 import graft.operators.RelationalOps
 import graft.functions.Aqi
 import graft.functions.DetRound.{r2, r4, sqlR2, sqlR4}
@@ -110,31 +111,15 @@ object PipelineQueries extends QueryPack {
     * oracle partial output as if it were the result, and leave the
     * abandoned query running for the rest of the process.
     */
-  private def awaitOrFail(q: org.apache.spark.sql.streaming.StreamingQuery,
-                          timeoutMs: Long, what: String): Unit =
+  private def awaitOrFail(q: StreamingQuery, timeoutMs: Long, what: String): Unit =
     if (!q.awaitTermination(timeoutMs)) {
       q.stop()
       sys.error(s"$what did not finish within ${timeoutMs / 1000} s")
     }
 
-  /** Pin session confs for the duration of `body`, restoring the prior
-    * values after (the `io.Maintenance.compact` save/restore
-    * convention). The queries run on a SHARED session, so a pinned
-    * conf that leaks past its row silently changes every later row in
-    * the same run — the exact bug class this helper closes.
-    */
-  private def withConfs[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
-    val prior = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
-  /** Conf pinning shared by every streaming parity row (scoped to the
-    * row via [[withConfs]] — the shared session is never mutated past
-    * it):
+  /** Confs every streaming parity row drains under, on its own clone
+    * of the caller's session ([[drainToParquet]]; the caller's session
+    * is never changed):
     *
     *  - shuffle.partitions = 8: a NEW checkpoint's state-partition
     *    count is the session's shuffle partitions; 32 state stores ×
@@ -159,13 +144,44 @@ object PipelineQueries extends QueryPack {
     *    cluster checkpoints live on HDFS/S3 where the default manager
     *    does not shell out — this pin only matters for file:// runs.
     */
-  private def withStreamConfs[T](s: SparkSession)(body: => T): T =
-    withConfs(s,
-      "spark.sql.shuffle.partitions" -> "8",
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
-      "spark.sql.streaming.checkpointFileManagerClass" ->
-        ("org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager"))(body)
+  private val streamConfs: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      ("org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager"))
+
+  /** The finalizing no-data batch is what advances the watermark past
+    * the last real window (or key) and runs the last emission or
+    * eviction. It is Spark's default; the rows whose contract depends
+    * on it pin it, so an environment override cannot red them with no
+    * hint why.
+    */
+  private val noDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled" -> "true"
+
+  /** Drain the stream `build` makes on an isolated clone of `s`
+    * ([[streamConfs]] plus `extraConf`) into parquet at `out`: one
+    * append-mode AvailableNow run on checkpoint `ckpt`, failing loudly
+    * after 300 s. Returns the finished query (for its progress).
+    */
+  private def drainToParquet(s: SparkSession, label: String, out: String, ckpt: String,
+                             extraConf: (String, String)*)(
+                             build: SparkSession => Dataset[_]): StreamingQuery =
+    GraftExtensions.isolated(s, streamConfs ++ extraConf: _*) { c =>
+      val q = build(c).writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      awaitOrFail(q, 300000, label)
+      q
+    }
+
+  /** The staged parquet batch files in `dir` as a stream, one file per
+    * micro-batch (they are ordered by their planted mtimes).
+    */
+  private def staged(c: SparkSession, schema: StructType, dir: String): DataFrame =
+    c.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
 
   /** The flagship composite — the whole reference transform chain
     * (process_openaq_raw.py:94-256 re-expressed): W1 dedup → derive
@@ -483,17 +499,11 @@ object PipelineQueries extends QueryPack {
       // partitions AND splits skewed ones at the advisory size)
       .hint("rebalance", col("year"), col("month"))
       .write.mode("overwrite").partitionBy("year", "month").parquet(out)
-    // keep hive partition values as the strings we wrote ("01" not 1);
-    // partition-type inference runs eagerly at read.parquet (the file
-    // index is built and cached in the relation), so restoring the
-    // conf after constructing the frame is safe
-    withConfs(s,
-      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-      s.read.parquet(out)
-        .groupBy("year", "month")
-        .agg(count(lit(1)).as("n"), r2(sum("value")).as("sum_value"))
-        .orderBy("year", "month")
-    }
+    // keep hive partition values as the strings we wrote ("01" not 1)
+    graft.io.Layout.readStringPartitioned(s, out, Seq("year", "month"))
+      .groupBy("year", "month")
+      .agg(count(lit(1)).as("n"), r2(sum("value")).as("sum_value"))
+      .orderBy("year", "month")
   }
 
   // K22 — sink FILE HYGIENE inside the oracle gate. The reference's
@@ -528,14 +538,11 @@ object PipelineQueries extends QueryPack {
       .write.mode("overwrite").partitionBy("day").parquet(out)
     // file census on what was just written: data files per day=… dir
     val hygieneOk = graft.io.FileCensus.hygieneOk(out)
-    withConfs(s,
-      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-      s.read.parquet(out)
-        .groupBy("day")
-        .agg(count(lit(1)).as("n"), r2(sum("value")).as("sum_value"))
-        .withColumn("hygiene_ok", lit(hygieneOk))
-        .orderBy("day")
-    }
+    graft.io.Layout.readStringPartitioned(s, out, Seq("day"))
+      .groupBy("day")
+      .agg(count(lit(1)).as("n"), r2(sum("value")).as("sum_value"))
+      .withColumn("hygiene_ok", lit(hygieneOk))
+      .orderBy("day")
   }
 
   // K5 — catalog registration + SQL over the registered table (SURVEY
@@ -2133,7 +2140,6 @@ object PipelineQueries extends QueryPack {
       |  ${sqlR4("sum(value)")} AS total_value
       |FROM s GROUP BY user_id, seq
       |ORDER BY user_id, session_start""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.load(s, dir, "events").select(col("user_id"), col("ts"), col("value"))
     val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
     val (lo, hi) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
@@ -2147,19 +2153,11 @@ object PipelineQueries extends QueryPack {
     stageSplit(ev.unionByName(sentinels), stage, Seq(
       (col("ts") <= cutoff, "b1.parquet", 1000000L),
       (col("ts") > cutoff, "b2.parquet", 2000000L)))
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
     val outDir = tmpDir("graft_st_sess_out")
-    val ckpt = tmpDir("graft_st_sess_ckpt")
-    // state-partition / checkpoint-manager pinning: see withStreamConfs
-    withStreamConfs(s) {
-      awaitOrFail(graft.streaming.Sessionize
-        .sessionizeStream(stream, gapMinutes = 30, watermarkDelay = "3650 days")
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start(), 300000, "st_sessionize_parity stream")
+    drainToParquet(s, "st_sessionize_parity stream", outDir,
+        tmpDir("graft_st_sess_ckpt")) { c =>
+      graft.streaming.Sessionize.sessionizeStream(staged(c, ev.schema, stage),
+        gapMinutes = 30, watermarkDelay = "3650 days")
     }
     s.read.parquet(outDir)
       .select(col("user_id"), col("session_start"), col("session_end"),
@@ -2181,7 +2179,6 @@ object PipelineQueries extends QueryPack {
       |  event_type, CAST(count(*) AS BIGINT) AS n
       |FROM events GROUP BY 1, 2
       |ORDER BY hour, event_type""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.load(s, dir, "events").select(col("ts"), col("event_type"))
     val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
     val (lo, hi) = (bounds.getTimestamp(0).getTime, bounds.getTimestamp(1).getTime)
@@ -2193,19 +2190,19 @@ object PipelineQueries extends QueryPack {
       (col("ts") > c1 && col("ts") <= c2, "b2.parquet", 2000000L),
       (col("ts") > c2, "b3.parquet", 3000000L)))
     val sinkName = s"st_hourly_parity_${System.nanoTime()}"
-    // see st_sessionize_parity: size streaming state partitions to the
-    // tiny test-scale key volume, not the batch default
-    withStreamConfs(s) {
+    // the memory sink registers its view in the clone the stream ran
+    // on, so the returned frame reads it there
+    GraftExtensions.isolated(s, streamConfs: _*) { c =>
       awaitOrFail(
-        s.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(stage)
+        staged(c, ev.schema, stage)
           .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .writeStream.format("memory").queryName(sinkName)
           .outputMode("complete")
           .trigger(Trigger.AvailableNow())
           .start(), 300000, "st_hourly_parity stream")
+      c.table(sinkName).orderBy("hour", "event_type")
     }
-    s.table(sinkName).orderBy("hour", "event_type")
   }
 
   // §2.9 streaming↔batch parity #3 — the CUSTOM BUCKET-STATE class
@@ -2224,7 +2221,6 @@ object PipelineQueries extends QueryPack {
     """SELECT CAST(count(*) AS BIGINT) AS n_docs,
       |  true AS nonvacuous_ok, true AS parity_ok
       |FROM documents""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     import graft.operators.DedupOps
     val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
     // deterministic event times ascending by doc_id (2024-01-01 + id s)
@@ -2236,17 +2232,9 @@ object PipelineQueries extends QueryPack {
       (col("doc_id") <= maxId / 2, "b1.parquet", 1000000L),
       (col("doc_id") > maxId / 2, "b2.parquet", 2000000L)))
     val outDir = tmpDir("graft_st_nd_out")
-    val ckpt = tmpDir("graft_st_nd_ckpt")
-    withStreamConfs(s) {
-      awaitOrFail(graft.streaming.NearDupStream
-        .nearDupPairs(s.readStream.schema(evd.schema)
-            .option("maxFilesPerTrigger", 1).parquet(stage),
-          "doc_id", "text", "ts", delay = "3650 days", maxHamming = 3)
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start(), 300000, "st_neardup_parity stream")
+    drainToParquet(s, "st_neardup_parity stream", outDir, tmpDir("graft_st_nd_ckpt")) { c =>
+      graft.streaming.NearDupStream.nearDupPairs(staged(c, evd.schema, stage),
+        "doc_id", "text", "ts", delay = "3650 days", maxHamming = 3)
     }
     // explicit schema: a zero-pair run leaves no parquet files to infer from
     val pairSchema = StructType(Seq(
@@ -2355,54 +2343,51 @@ object PipelineQueries extends QueryPack {
   // pinned against the exact computation, which the oracle recomputes:
   // the HLL++ estimate must sit within 3·rsd of the exact distinct
   // count and the digest median inside the exact p45–p55 rank window.
-  // The approx rows are materialized UNDER the enabled conf (a lazy
-  // plan would silently re-optimize at sink time with the conf already
-  // reset, pinning the exact path instead of the rewrite).
+  // The approx rows are materialized on the enabled clone and joined
+  // to the exact half as local rows.
   q("k20_approx_rewrite",
     """SELECT l_returnflag, CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_nd,
       |  true AS distinct_ok, true AS median_ok
       |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
     Tables.registerAll(s, dir)
-    // The approx half runs on an ISOLATED newSession() (the k21
-    // convention): the rewrite confs flip the meaning of
-    // COUNT(DISTINCT)/percentile() for EVERY query optimized while
-    // they are set, and the verify harness optimizes queries
-    // concurrently on the shared session — r13 caught `ann_ivf_train`
-    // hashing an HLL++ ESTIMATE (500 → 484) of its exact id census
-    // when its plan compiled inside this row's enabled window. A
-    // try/finally restore shrinks the window; only a separate SQLConf
-    // closes it.
-    val ns = s.newSession()
-    Tables.load(ns, dir, "lineitem").createOrReplaceTempView("lineitem")
-    // self-register the rewrite rules on plain sessions (no
-    // GraftExtensions wiring — same fallback pattern as TopKPerGroup's
-    // strategy): extraOptimizations runs in the optimizer's
-    // user-provided batch, so the ACTIVE-in-plan requirement below
-    // holds under any harness that reaches this query
-    graft.plans.ApproxDistinctRewrite.synchronized {
-      val extra = ns.experimental.extraOptimizations
-      val injected = ns.sessionState.optimizer.extendedOperatorOptimizationRules
-      // per-rule presence: a wiring that injects only ONE of the two
-      // rules (e.g. a future extension variant) must not cause the
-      // other to be skipped NOR this one to be double-registered
-      def present(isRule: org.apache.spark.sql.catalyst.rules.Rule[
-          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] => Boolean) =
-        extra.exists(isRule) || injected.exists(isRule)
-      val missing = Seq[org.apache.spark.sql.catalyst.rules.Rule[
-          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]](
-        graft.plans.ApproxDistinctRewrite(ns),
-        graft.plans.ApproxPercentileRewrite(ns))
-        .filterNot(r => present(_.getClass == r.getClass))
-      if (missing.nonEmpty)
-        ns.experimental.extraOptimizations = extra ++ missing
-    }
+    // The approx half runs on an isolated clone (the k21 convention):
+    // the rewrite confs flip the meaning of COUNT(DISTINCT)/percentile()
+    // for EVERY query optimized while they are set, and the verify
+    // harness optimizes queries concurrently on the shared session —
+    // r13 caught `ann_ivf_train` hashing an HLL++ ESTIMATE (500 → 484)
+    // of its exact id census when its plan compiled inside this row's
+    // enabled window. A try/finally restore shrinks the window; only a
+    // separate SQLConf closes it. The clone carries the caller's
+    // `lineitem` view.
     val sqlText =
       """SELECT l_returnflag, count(DISTINCT l_partkey) AS nd,
         |  percentile(l_extendedprice, 0.5) AS med
         |FROM lineitem GROUP BY l_returnflag""".stripMargin
-    ns.conf.set("spark.graft.approxDistinct", "true")
-    ns.conf.set("spark.graft.approxPercentile", "true")
-    val approxRows = try {
+    val approxRows = GraftExtensions.isolated(s,
+        "spark.graft.approxDistinct" -> "true",
+        "spark.graft.approxPercentile" -> "true") { ns =>
+      // self-register the rewrite rules on plain sessions (no
+      // GraftExtensions wiring — same fallback pattern as TopKPerGroup's
+      // strategy): extraOptimizations runs in the optimizer's
+      // user-provided batch, so the ACTIVE-in-plan requirement below
+      // holds under any harness that reaches this query
+      graft.plans.ApproxDistinctRewrite.synchronized {
+        val extra = ns.experimental.extraOptimizations
+        val injected = ns.sessionState.optimizer.extendedOperatorOptimizationRules
+        // per-rule presence: a wiring that injects only ONE of the two
+        // rules (e.g. a future extension variant) must not cause the
+        // other to be skipped NOR this one to be double-registered
+        def present(isRule: org.apache.spark.sql.catalyst.rules.Rule[
+            org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] => Boolean) =
+          extra.exists(isRule) || injected.exists(isRule)
+        val missing = Seq[org.apache.spark.sql.catalyst.rules.Rule[
+            org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]](
+          graft.plans.ApproxDistinctRewrite(ns),
+          graft.plans.ApproxPercentileRewrite(ns))
+          .filterNot(r => present(_.getClass == r.getClass))
+        if (missing.nonEmpty)
+          ns.experimental.extraOptimizations = extra ++ missing
+      }
       val adf = ns.sql(sqlText)
       val opt = adf.queryExecution.optimizedPlan
       val hasHll = opt.exists(_.expressions.exists(_.exists {
@@ -2415,12 +2400,7 @@ object PipelineQueries extends QueryPack {
       }))
       require(hasHll, "approxDistinct rewrite registered but NOT active in the plan")
       require(hasDigest, "approxPercentile rewrite registered but NOT active in the plan")
-      adf.collect() // 3 groups — materialize under the enabled conf
-    } finally {
-      // the isolated session is discarded, but reset anyway so a
-      // FUTURE reuse of ns (or a copied snippet) starts exact
-      ns.conf.set("spark.graft.approxDistinct", "false")
-      ns.conf.set("spark.graft.approxPercentile", "false")
+      adf.collect() // 3 groups
     }
     val approx = s.createDataFrame(
       java.util.Arrays.asList(approxRows: _*),
@@ -2461,9 +2441,9 @@ object PipelineQueries extends QueryPack {
   // without column stats, BroadcastHashJoin with them), the estimate
   // drop is required (≥ 4×), and the join result is materialized
   // UNDER the CBO conf (k20's lazy-plan lesson) then hash-pinned
-  // against the oracle's recomputation. Runs on an isolated
-  // newSession(): threshold/CBO knobs never leak into concurrently
-  // verifying queries. At 100 TB this flip is the difference between
+  // against the oracle's recomputation. Runs on isolated clones:
+  // threshold/CBO knobs never leak into concurrently verifying
+  // queries. At 100 TB this flip is the difference between
   // shuffling a fact table and shipping a few-MB dim — stats turn the
   // optimizer's size guess into a measurement.
   q("k21_cbo_join",
@@ -2476,78 +2456,76 @@ object PipelineQueries extends QueryPack {
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
     import graft.io.CatalogOps
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val ns = s.newSession()
     val tag = java.lang.Long.toHexString(System.nanoTime())
     val tOrders = s"k21_orders_$tag"; val tCust = s"k21_cust_$tag"
-    // plan-stats evaluation reads the THREAD-ACTIVE session's SQLConf
-    // (SQLConf.get), not the Dataset's — without this, ns's CBO flag
-    // is invisible to Statistics.toPlanStats and the estimates never
-    // move (measured: rows=None with the stats sitting in the catalog)
-    val prevActive = org.apache.spark.sql.SparkSession.getActiveSession
-    org.apache.spark.sql.SparkSession.setActiveSession(ns)
-    val (rows, sepOk, cboBhjOk, baseNoBhjOk) = try {
-      // table creation INSIDE the try: if the second write (or a load)
-      // throws, the finally's DROP TABLE IF EXISTS still covers
-      // whatever was created — otherwise repeated verify runs leak
-      // orphaned k21_* tables into the shared warehouse
-      Tables.load(ns, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
-        .write.format("parquet").saveAsTable(tOrders)
-      Tables.load(ns, dir, "customer")
-        .select("c_custkey", "c_mktsegment", "c_acctbal")
-        .write.format("parquet").saveAsTable(tCust)
-      def joined = ns.table(tOrders)
-        .join(ns.table(tCust), col("o_custkey") === col("c_custkey"))
-        .filter(col("c_mktsegment") === "BUILDING" && col("c_acctbal") < 1000)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_orders"), r2(sum("o_totalprice")).as("sum_price"))
-        .orderBy("o_orderpriority")
-      // estimate the shape the JOIN actually builds on — filter THEN
-      // key-only projection (column pruning scales even the size-only
-      // estimate by the width ratio, so measuring the full-width
-      // filter would place the threshold on the wrong side of the
-      // baseline's pruned child)
-      def custEstimate: BigInt = ns.table(tCust)
-        .filter(col("c_mktsegment") === "BUILDING" && col("c_acctbal") < 1000)
-        .select("c_custkey")
-        .queryExecution.optimizedPlan.stats.sizeInBytes
-      CatalogOps.analyzeTable(ns, tCust)
-      CatalogOps.analyzeTable(ns, tOrders)
-      // s0: the size-only baseline — filter keeps the table's on-disk
-      // bytes (what the optimizer believes without CBO)
-      val s0 = custEstimate
-      ns.conf.set("spark.sql.cbo.enabled", "true")
-      // column stats: NDV(c_mktsegment)=5 × acctbal min/max range
-      // prices the filter at ~2% of the rows
-      CatalogOps.analyzeTable(ns, tCust, Seq("c_custkey", "c_mktsegment", "c_acctbal"))
-      val s2 = custEstimate
-      // the three flags below are NOT require()d here — they flow
-      // into the hashed *_ok columns, where the oracle pins them
-      // true. A stats drift (e.g. a Spark version bump moving both
-      // estimates to the same side of the threshold) therefore shows
-      // up as a value/hash MISMATCH on this row rather than passing
-      // the plan asserts vacuously; a local require would detect the
-      // same drift but make the oracle columns unfalsifiable.
-      val sep = s2 * 4 <= s0
-      // threshold strictly between the two estimates (geometric mean:
-      // ≥ 2× margin to each side once s0/s2 ≥ 4)
-      val threshold = BigInt(math.sqrt((s0 * s2).toDouble).toLong)
-      ns.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold.toString)
-      def hasBhj = joined.queryExecution.sparkPlan.exists {
-        case _: BroadcastHashJoinExec => true
-        case _ => false
-      }
-      val cboFlipped = hasBhj
-      val out = joined.collect() // materialize UNDER the CBO conf
-      ns.conf.set("spark.sql.cbo.enabled", "false")
-      val baseShuffles = !hasBhj
-      (out, sep, cboFlipped, baseShuffles)
-    } finally {
-      ns.sql(s"DROP TABLE IF EXISTS $tOrders")
-      ns.sql(s"DROP TABLE IF EXISTS $tCust")
-      prevActive match {
-        case Some(p) => org.apache.spark.sql.SparkSession.setActiveSession(p)
-        case None => org.apache.spark.sql.SparkSession.clearActiveSession()
+    def joined(c: SparkSession) = c.table(tOrders)
+      .join(c.table(tCust), col("o_custkey") === col("c_custkey"))
+      .filter(col("c_mktsegment") === "BUILDING" && col("c_acctbal") < 1000)
+      .groupBy("o_orderpriority")
+      .agg(count(lit(1)).as("n_orders"), r2(sum("o_totalprice")).as("sum_price"))
+      .orderBy("o_orderpriority")
+    // estimate the shape the JOIN actually builds on — filter THEN
+    // key-only projection (column pruning scales even the size-only
+    // estimate by the width ratio, so measuring the full-width
+    // filter would place the threshold on the wrong side of the
+    // baseline's pruned child). Plan-stats evaluation reads the
+    // THREAD-ACTIVE session's SQLConf (SQLConf.get), not the
+    // Dataset's, which `isolated` sets to the clone it runs on.
+    def custEstimate(c: SparkSession): BigInt = c.table(tCust)
+      .filter(col("c_mktsegment") === "BUILDING" && col("c_acctbal") < 1000)
+      .select("c_custkey")
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    def hasBhj(c: SparkSession) = joined(c).queryExecution.sparkPlan.exists {
+      case _: BroadcastHashJoinExec => true
+      case _ => false
+    }
+    val cbo = "spark.sql.cbo.enabled" -> "true"
+    // each phase plans on its own clone; the tables and their stats
+    // live in the shared catalog, which every clone sees
+    val (rows, sepOk, cboBhjOk, baseNoBhjOk) = GraftExtensions.isolated(s) { ns =>
+      try {
+        // table creation INSIDE the try: if the second write (or a load)
+        // throws, the finally's DROP TABLE IF EXISTS still covers
+        // whatever was created — otherwise repeated verify runs leak
+        // orphaned k21_* tables into the shared warehouse
+        Tables.load(ns, dir, "orders")
+          .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
+          .write.format("parquet").saveAsTable(tOrders)
+        Tables.load(ns, dir, "customer")
+          .select("c_custkey", "c_mktsegment", "c_acctbal")
+          .write.format("parquet").saveAsTable(tCust)
+        CatalogOps.analyzeTable(ns, tCust)
+        CatalogOps.analyzeTable(ns, tOrders)
+        // s0: the size-only baseline — filter keeps the table's on-disk
+        // bytes (what the optimizer believes without CBO)
+        val s0 = custEstimate(ns)
+        // column stats: NDV(c_mktsegment)=5 × acctbal min/max range
+        // prices the filter at ~2% of the rows
+        val s2 = GraftExtensions.isolated(ns, cbo) { c =>
+          CatalogOps.analyzeTable(c, tCust, Seq("c_custkey", "c_mktsegment", "c_acctbal"))
+          custEstimate(c)
+        }
+        // the three flags below are NOT require()d here — they flow
+        // into the hashed *_ok columns, where the oracle pins them
+        // true. A stats drift (e.g. a Spark version bump moving both
+        // estimates to the same side of the threshold) therefore shows
+        // up as a value/hash MISMATCH on this row rather than passing
+        // the plan asserts vacuously; a local require would detect the
+        // same drift but make the oracle columns unfalsifiable.
+        val sep = s2 * 4 <= s0
+        // threshold strictly between the two estimates (geometric mean:
+        // ≥ 2× margin to each side once s0/s2 ≥ 4)
+        val threshold = "spark.sql.autoBroadcastJoinThreshold" ->
+          BigInt(math.sqrt((s0 * s2).toDouble).toLong).toString
+        val (out, cboFlipped) = GraftExtensions.isolated(ns, cbo, threshold) { c =>
+          val flipped = hasBhj(c)
+          (joined(c).collect(), flipped) // materialize UNDER the CBO conf
+        }
+        val baseShuffles = GraftExtensions.isolated(ns, threshold)(c => !hasBhj(c))
+        (out, sep, cboFlipped, baseShuffles)
+      } finally {
+        ns.sql(s"DROP TABLE IF EXISTS $tOrders")
+        ns.sql(s"DROP TABLE IF EXISTS $tCust")
       }
     }
     s.createDataFrame(java.util.Arrays.asList(rows: _*),
@@ -2594,7 +2572,6 @@ object PipelineQueries extends QueryPack {
       |SELECT event_id, ts, user_id, value FROM e
       |WHERE event_id % 2 = 0 OR epoch_us(ts) >= (SELECT wm_us FROM wm)
       |ORDER BY event_id""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.load(s, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
     val even = ev.filter(col("event_id") % 2 === 0)
@@ -2605,17 +2582,10 @@ object PipelineQueries extends QueryPack {
     stageFile(even.filter(col("ts") >= reinjectFrom), stage, "b2.parquet", 2000000L)
     stageFile(ev.filter(col("event_id") % 2 === 1), stage, "b3.parquet", 3000000L)
     val outDir = tmpDir("graft_st_late_out")
-    val ckpt = tmpDir("graft_st_late_ckpt")
-    withStreamConfs(s) {
-      awaitOrFail(
-        s.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(stage)
-          .withWatermark("ts", "7 days")
-          .dropDuplicates("event_id", "ts")
-          .writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start(), 300000, "st_late_drop_parity stream")
+    drainToParquet(s, "st_late_drop_parity stream", outDir, tmpDir("graft_st_late_ckpt")) { c =>
+      staged(c, ev.schema, stage)
+        .withWatermark("ts", "7 days")
+        .dropDuplicates("event_id", "ts")
     }
     s.read.schema(ev.schema).parquet(outDir).orderBy("event_id")
   }
@@ -2650,7 +2620,6 @@ object PipelineQueries extends QueryPack {
       |  value, extracted_at, sensor_id
       |FROM r WHERE rn = 1
       |ORDER BY location_id, datetime, parameter""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val meas = Tables.load(s, dir, "events").select(
       col("user_id").as("location_id"),
       col("event_id").as("sensor_id"),
@@ -2673,18 +2642,10 @@ object PipelineQueries extends QueryPack {
       (abs(col("sensor_id") % 2) === 1, "b2.parquet", 2000000L),
       (col("sensor_id") === -2L, "b3.parquet", 3000000L)))
     val outDir = tmpDir("graft_st_fresh_out")
-    val ckpt = tmpDir("graft_st_fresh_ckpt")
-    withStreamConfs(s) {
-      awaitOrFail(graft.streaming.AqStreaming
-        .dedupFreshestStream(
-          s.readStream.schema(meas.schema).option("maxFilesPerTrigger", 1)
-            .parquet(stage),
-          watermark = "3650 days")
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start(), 300000, "st_dedup_freshest_parity stream")
+    drainToParquet(s, "st_dedup_freshest_parity stream", outDir,
+        tmpDir("graft_st_fresh_ckpt")) { c =>
+      graft.streaming.AqStreaming.dedupFreshestStream(staged(c, meas.schema, stage),
+        watermark = "3650 days")
     }
     s.read.parquet(outDir)
       .select("location_id", "datetime", "parameter", "value",
@@ -2724,7 +2685,6 @@ object PipelineQueries extends QueryPack {
       |  ${sqlR4("sum(value)")} AS total_value
       |FROM s GROUP BY user_id, seq
       |ORDER BY user_id, session_start""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.load(s, dir, "events").select(col("user_id"), col("ts"), col("value"))
     val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
     val (lo, hi) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
@@ -2735,30 +2695,22 @@ object PipelineQueries extends QueryPack {
     val stage = tmpDir("graft_st_restart_in")
     val outDir = tmpDir("graft_st_restart_out")
     val ckpt = tmpDir("graft_st_restart_ckpt")
-    withStreamConfs(s) {
-      def runOnce(label: String): Unit =
-        awaitOrFail(graft.streaming.Sessionize
-          .sessionizeStream(
-            s.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1)
-              .parquet(stage),
-            gapMinutes = 30, watermarkDelay = "3650 days")
-          .writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start(), 300000, label)
-      // run 1: only batch 1 exists; AvailableNow drains it and the
-      // query TERMINATES — open sessions now live only in the
-      // checkpoint's state store files.
-      stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
-      runOnce("st_restart_parity stream run 1")
-      // run 2: a NEW query (fresh StreamingQuery id incarnation, same
-      // checkpoint) must resume past b1 via the offset log and restore
-      // per-user state from disk before folding in batch 2.
-      stageFile(ev.filter(col("ts") > cutoff).unionByName(sentinels),
-        stage, "b2.parquet", 2000000L)
-      runOnce("st_restart_parity stream run 2")
-    }
+    def runOnce(label: String): Unit =
+      drainToParquet(s, label, outDir, ckpt) { c =>
+        graft.streaming.Sessionize.sessionizeStream(staged(c, ev.schema, stage),
+          gapMinutes = 30, watermarkDelay = "3650 days")
+      }
+    // run 1: only batch 1 exists; AvailableNow drains it and the
+    // query TERMINATES — open sessions now live only in the
+    // checkpoint's state store files.
+    stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
+    runOnce("st_restart_parity stream run 1")
+    // run 2: a NEW query (fresh StreamingQuery id incarnation, same
+    // checkpoint) must resume past b1 via the offset log and restore
+    // per-user state from disk before folding in batch 2.
+    stageFile(ev.filter(col("ts") > cutoff).unionByName(sentinels),
+      stage, "b2.parquet", 2000000L)
+    runOnce("st_restart_parity stream run 2")
     s.read.parquet(outDir)
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), r4(col("total_value")).as("total_value"))
@@ -2799,7 +2751,6 @@ object PipelineQueries extends QueryPack {
       |FROM c LEFT JOIN p ON c.user_id = p.user_id
       |  AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE
       |ORDER BY 1, 2, 3, 5""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.load(s, dir, "events")
       .select(col("user_id"), col("ts"), col("value"), col("event_type"))
     val causes = ev.filter(col("event_type") === "click").drop("event_type")
@@ -2820,19 +2771,10 @@ object PipelineQueries extends QueryPack {
     stageSplit(causes.unionByName(heartbeat), cStage, cuts)
     stageSplit(effects.unionByName(heartbeat), eStage, cuts)
     val outDir = tmpDir("graft_st_join_out")
-    val ckpt = tmpDir("graft_st_join_ckpt")
-    val schema = causes.schema
-    def read(d: String) = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(d)
-    withStreamConfs(s) {
-      awaitOrFail(graft.streaming.StreamJoins
-        .attributionJoinLeftOuter(read(cStage), read(eStage),
-          windowMinutes = 30, watermarkDelay = "10 minutes")
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start(), 300000, "st_join_parity stream")
+    drainToParquet(s, "st_join_parity stream", outDir, tmpDir("graft_st_join_ckpt")) { c =>
+      graft.streaming.StreamJoins.attributionJoinLeftOuter(
+        staged(c, causes.schema, cStage), staged(c, causes.schema, eStage),
+        windowMinutes = 30, watermarkDelay = "10 minutes")
     }
     s.read.parquet(outDir)
       .filter(col("user_id") >= 0) // drop the two heartbeats' self-pair
@@ -2871,7 +2813,6 @@ object PipelineQueries extends QueryPack {
       |FROM c LEFT JOIN p ON c.user_id = p.user_id
       |  AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE
       |ORDER BY 1, 2, 3, 5""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.load(s, dir, "events")
       .select(
         when(pmod(col("user_id"), lit(5)) === 0, lit(1L))
@@ -2898,23 +2839,14 @@ object PipelineQueries extends QueryPack {
     stageSplit(causes.unionByName(heartbeat), cStage, cuts)
     stageSplit(effects.unionByName(heartbeat), eStage, cuts)
     val outDir = tmpDir("graft_st_jsk_out")
-    val ckpt = tmpDir("graft_st_jsk_ckpt")
-    val schema = causes.schema
-    def read(d: String) = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(d)
-    val stateRows = withStreamConfs(s) {
-      val query = graft.streaming.StreamJoins
-        .attributionJoinLeftOuter(read(cStage), read(eStage),
-          windowMinutes = 30, watermarkDelay = "10 minutes")
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitOrFail(query, 300000, "st_join_skew_parity stream")
-      Option(query.lastProgress)
-        .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
+    val query = drainToParquet(s, "st_join_skew_parity stream", outDir,
+        tmpDir("graft_st_jsk_ckpt")) { c =>
+      graft.streaming.StreamJoins.attributionJoinLeftOuter(
+        staged(c, causes.schema, cStage), staged(c, causes.schema, eStage),
+        windowMinutes = 30, watermarkDelay = "10 minutes")
     }
+    val stateRows = Option(query.lastProgress)
+      .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
     // after the 2100 heartbeats advance the watermark, every real
     // window is closed: residual join state is the heartbeats alone
     // (≤ a few rows) — NOT proportional to the hot key's row count
@@ -2951,7 +2883,6 @@ object PipelineQueries extends QueryPack {
       |FROM c LEFT JOIN p ON c.user_id = p.user_id
       |  AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE
       |ORDER BY 1, 2, 3, 5""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.load(s, dir, "events")
       .select(col("user_id"), col("ts"), col("value"), col("event_type"))
     val causes = ev.filter(col("event_type") === "click").drop("event_type")
@@ -2966,32 +2897,24 @@ object PipelineQueries extends QueryPack {
     val eStage = tmpDir("graft_st_jr_e")
     val outDir = tmpDir("graft_st_jr_out")
     val ckpt = tmpDir("graft_st_jr_ckpt")
-    val schema = causes.schema
-    def read(d: String) = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(d)
-    withStreamConfs(s) {
-      def runOnce(label: String): Unit =
-        awaitOrFail(graft.streaming.StreamJoins
-          .attributionJoinLeftOuter(read(cStage), read(eStage),
-            windowMinutes = 30, watermarkDelay = "10 minutes")
-          .writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start(), 300000, label)
-      // run 1: batch 1 only (both sides ≤ cutoff); on termination every
-      // still-joinable row sits solely in the symmetric join state
-      stageFile(causes.filter(col("ts") <= cutoff), cStage, "b1.parquet", 1000000L)
-      stageFile(effects.filter(col("ts") <= cutoff), eStage, "b1.parquet", 1000000L)
-      runOnce("st_join_restart_parity stream run 1")
-      // run 2: a NEW query on the same checkpoint folds in batch 2 +
-      // the far-future heartbeats that close every remaining window
-      stageFile(causes.filter(col("ts") > cutoff).unionByName(heartbeat),
-        cStage, "b2.parquet", 2000000L)
-      stageFile(effects.filter(col("ts") > cutoff).unionByName(heartbeat),
-        eStage, "b2.parquet", 2000000L)
-      runOnce("st_join_restart_parity stream run 2")
-    }
+    def runOnce(label: String): Unit =
+      drainToParquet(s, label, outDir, ckpt) { c =>
+        graft.streaming.StreamJoins.attributionJoinLeftOuter(
+          staged(c, causes.schema, cStage), staged(c, causes.schema, eStage),
+          windowMinutes = 30, watermarkDelay = "10 minutes")
+      }
+    // run 1: batch 1 only (both sides ≤ cutoff); on termination every
+    // still-joinable row sits solely in the symmetric join state
+    stageFile(causes.filter(col("ts") <= cutoff), cStage, "b1.parquet", 1000000L)
+    stageFile(effects.filter(col("ts") <= cutoff), eStage, "b1.parquet", 1000000L)
+    runOnce("st_join_restart_parity stream run 1")
+    // run 2: a NEW query on the same checkpoint folds in batch 2 +
+    // the far-future heartbeats that close every remaining window
+    stageFile(causes.filter(col("ts") > cutoff).unionByName(heartbeat),
+      cStage, "b2.parquet", 2000000L)
+    stageFile(effects.filter(col("ts") > cutoff).unionByName(heartbeat),
+      eStage, "b2.parquet", 2000000L)
+    runOnce("st_join_restart_parity stream run 2")
     s.read.parquet(outDir)
       .filter(col("user_id") >= 0) // drop the two heartbeats' self-pair
       .select("user_id", "c_ts", "e_ts", "c_value", "e_value")
@@ -3034,19 +2957,19 @@ object PipelineQueries extends QueryPack {
   // windowed-agg × restart × RocksDB combination inside the oracle
   // gate so a provider-specific recovery regression turns a
   // CORRECTNESS row red rather than only a probe line.
-  // The provider is set on a fresh session, not the caller's: rows
-  // run concurrently on one shared session (Verify), and a borrowed
-  // conf would be visible to every row running alongside this one.
+  // The provider goes on the stream's isolated clone, never on the
+  // caller's session: rows run concurrently on one shared session
+  // (Verify), and a borrowed conf would be visible to every row
+  // running alongside this one.
   q("st_restart_agg_rocksdb_parity", restartAggOracle) { (s, dir) =>
-    val rocks = s.newSession()
-    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    restartAggParity(rocks, dir, "st_restart_agg_rocksdb_parity", "raggrdb")
+    restartAggParity(s, dir, "st_restart_agg_rocksdb_parity", "raggrdb", rocksDb)
   }
 
-  private def restartAggParity(s: SparkSession, dir: String,
-                               label: String, tag: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  private val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  private def restartAggParity(s: SparkSession, dir: String, label: String,
+                               tag: String, extraConf: (String, String)*): DataFrame = {
     val ev = Tables.load(s, dir, "events").select(col("ts"), col("event_type"))
     val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
     val (lo, hi) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
@@ -3057,26 +2980,19 @@ object PipelineQueries extends QueryPack {
     val stage = tmpDir(s"graft_st_${tag}_in")
     val outDir = tmpDir(s"graft_st_${tag}_out")
     val ckpt = tmpDir(s"graft_st_${tag}_ckpt")
-    withStreamConfs(s) {
-      def runOnce(label: String): Unit =
-        awaitOrFail(
-          s.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .withWatermark("ts", "1 hour")
-            .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-            .agg(count(lit(1)).as("n"))
-            .select(col("window.start").as("hour"), col("event_type"), col("n"))
-            .writeStream.format("parquet")
-            .option("path", outDir).option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start(), 300000, label)
-      stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
-      runOnce(s"$label stream run 1")
-      stageFile(ev.filter(col("ts") > cutoff).unionByName(heartbeat),
-        stage, "b2.parquet", 2000000L)
-      runOnce(s"$label stream run 2")
-    }
+    def runOnce(label: String): Unit =
+      drainToParquet(s, label, outDir, ckpt, extraConf: _*) { c =>
+        staged(c, ev.schema, stage)
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("window.start").as("hour"), col("event_type"), col("n"))
+      }
+    stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
+    runOnce(s"$label stream run 1")
+    stageFile(ev.filter(col("ts") > cutoff).unionByName(heartbeat),
+      stage, "b2.parquet", 2000000L)
+    runOnce(s"$label stream run 2")
     s.read.parquet(outDir)
       .filter(col("event_type") =!= "hb") // belt-and-braces: never emits
       .select("hour", "event_type", "n")
@@ -3113,7 +3029,6 @@ object PipelineQueries extends QueryPack {
       |  ${sqlR4("sum(value)")} AS total_value
       |FROM s GROUP BY user_id, seq
       |ORDER BY user_id, session_start""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.load(s, dir, "events").select(col("user_id"), col("ts"), col("value"))
     val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
     val (lo, hi) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
@@ -3124,27 +3039,16 @@ object PipelineQueries extends QueryPack {
     val stage = tmpDir("graft_st_rv2_in")
     val outDir = tmpDir("graft_st_rv2_out")
     val ckpt = tmpDir("graft_st_rv2_ckpt")
-    withStreamConfs(s) {
-      withConfs(s, "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        def runOnce(label: String): Unit =
-          awaitOrFail(graft.streaming.SessionizeV2
-            .sessionizeStream(
-              s.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1)
-                .parquet(stage),
-              gapMinutes = 30, watermarkDelay = "3650 days")
-            .writeStream.format("parquet")
-            .option("path", outDir).option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start(), 300000, label)
-        stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
-        runOnce("st_restart_v2_parity stream run 1")
-        stageFile(ev.filter(col("ts") > cutoff).unionByName(sentinels),
-          stage, "b2.parquet", 2000000L)
-        runOnce("st_restart_v2_parity stream run 2")
+    def runOnce(label: String): Unit =
+      drainToParquet(s, label, outDir, ckpt, rocksDb) { c =>
+        graft.streaming.SessionizeV2.sessionizeStream(staged(c, ev.schema, stage),
+          gapMinutes = 30, watermarkDelay = "3650 days")
       }
-    }
+    stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
+    runOnce("st_restart_v2_parity stream run 1")
+    stageFile(ev.filter(col("ts") > cutoff).unionByName(sentinels),
+      stage, "b2.parquet", 2000000L)
+    runOnce("st_restart_v2_parity stream run 2")
     s.read.parquet(outDir)
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), r4(col("total_value")).as("total_value"))
@@ -3185,7 +3089,6 @@ object PipelineQueries extends QueryPack {
       |FROM events
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.load(s, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
     val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
@@ -3196,20 +3099,16 @@ object PipelineQueries extends QueryPack {
     val withDupes = ev.unionByName(dupes)
     val stage = tmpDir("graft_st_bound_in")
     val outDir = tmpDir("graft_st_bound_out")
-    val ckpt = tmpDir("graft_st_bound_ckpt")
-    // the finalizing no-data batch is what advances the watermark to
-    // max(ts) − delay and runs the LAST eviction; the census below is
-    // only deterministic with it pinned on (it is Spark's default,
-    // but this row's contract depends on it)
-    val stateRows = withStreamConfs(s) {
-      withConfs(s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
-      stageSplit(withDupes, stage, Seq(
-        (col("ts") < cut(1), "b1.parquet", 1000000L),
-        (col("ts") >= cut(1) && col("ts") < cut(2), "b2.parquet", 2000000L),
-        (col("ts") >= cut(2) && col("ts") < cut(3), "b3.parquet", 3000000L),
-        (col("ts") >= cut(3), "b4.parquet", 4000000L)))
-      val query = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+    stageSplit(withDupes, stage, Seq(
+      (col("ts") < cut(1), "b1.parquet", 1000000L),
+      (col("ts") >= cut(1) && col("ts") < cut(2), "b2.parquet", 2000000L),
+      (col("ts") >= cut(2) && col("ts") < cut(3), "b3.parquet", 3000000L),
+      (col("ts") >= cut(3), "b4.parquet", 4000000L)))
+    // the finalizing no-data batch runs the LAST eviction, at
+    // watermark max(ts) − delay; the census below depends on it
+    val query = drainToParquet(s, "st_state_bound_parity stream", outDir,
+        tmpDir("graft_st_bound_ckpt"), noDataBatches) { c =>
+      staged(c, ev.schema, stage)
         .withWatermark("ts", "3 days")
         // NOT dropDuplicates(keys): with the event-time column absent
         // from the key, that operator never evicts (state ∝ stream
@@ -3218,16 +3117,9 @@ object PipelineQueries extends QueryPack {
         // dropDuplicatesWithinWatermark dedups the key within the
         // watermark delay of first sight and evicts on watermark pass.
         .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitOrFail(query, 300000, "st_state_bound_parity stream")
-      Option(query.lastProgress)
-        .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
-      }
     }
+    val stateRows = Option(query.lastProgress)
+      .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
     // kept set is exactly keys(ts ≥ hi − 2×delay = last 6 days); bound
     // with TWO days of margin (8-day window): the single-day margin had
     // only ~14% slack under the uniform generator, close enough that a
@@ -3271,7 +3163,6 @@ object PipelineQueries extends QueryPack {
       |FROM events
       |GROUP BY 1, 2
       |ORDER BY day, bucket""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.load(s, dir, "events").select(col("ts"), col("value"))
     val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
     val (lo, hi) = (bounds.getTimestamp(0).getTime, bounds.getTimestamp(1).getTime)
@@ -3291,25 +3182,13 @@ object PipelineQueries extends QueryPack {
       (col("ts") > c2 && col("ts") < sentinelTs, "b3.parquet", 3000000L),
       (col("ts") >= sentinelTs, "b4.parquet", 4000000L)))
     val outDir = tmpDir("graft_st_drift_out")
-    val ckpt = tmpDir("graft_st_drift_ckpt")
-    // noDataMicroBatches pinned ON (it is Spark's default, but the
-    // sentinel contract depends on it: the finalizing no-data batch is
-    // what advances the watermark past the last real window and emits
-    // it — an environment override would red this row with no hint why)
-    withStreamConfs(s) {
-      withConfs(s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
-      awaitOrFail(graft.streaming.CurationStream
-        .bucketHistogram(
-          s.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1)
-            .parquet(stage),
-          "value", "ts", lo = 0.0, hi = 500.0, nBuckets = 10,
-          windowDur = "1 day", delay = "1 hour")
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start(), 300000, "st_drift_parity stream")
-      }
+    // the sentinel's contract: the finalizing no-data batch emits the
+    // last real window
+    drainToParquet(s, "st_drift_parity stream", outDir, tmpDir("graft_st_drift_ckpt"),
+        noDataBatches) { c =>
+      graft.streaming.CurationStream.bucketHistogram(staged(c, ev.schema, stage),
+        "value", "ts", lo = 0.0, hi = 500.0, nBuckets = 10,
+        windowDur = "1 day", delay = "1 hour")
     }
     s.read.parquet(outDir)
       .select(date_format(col("window_start"), "yyyy-MM-dd").as("day"),
@@ -3355,7 +3234,6 @@ object PipelineQueries extends QueryPack {
       |  true AS covered_ok, true AS bounds_ok
       |FROM n LEFT JOIN h USING (window_start)
       |ORDER BY window_start""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val k = trendingK
     val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
     val evd = docs.withColumn("ts",
@@ -3371,23 +3249,11 @@ object PipelineQueries extends QueryPack {
       (col("doc_id") >= 0 && col("doc_id") <= maxId / 2, "b1.parquet", 1000000L),
       (col("doc_id") > maxId / 2 || col("doc_id") < 0, "b2.parquet", 2000000L)))
     val outDir = tmpDir("graft_st_trend_out")
-    val ckpt = tmpDir("graft_st_trend_ckpt")
-    // noDataMicroBatches pinned ON — same sentinel contract as
-    // st_drift_parity (the last real window closes only in the
-    // finalizing no-data batch)
-    withStreamConfs(s) {
-      withConfs(s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
-      awaitOrFail(graft.streaming.CurationStream
-        .trendingTerms(
-          s.readStream.schema(evd.schema).option("maxFilesPerTrigger", 1)
-            .parquet(stage),
-          "text", "ts", windowDur = "2 minutes", delay = "1 minute", k = k)
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start(), 300000, "st_trending_parity stream")
-      }
+    // same sentinel contract as st_drift_parity
+    drainToParquet(s, "st_trending_parity stream", outDir, tmpDir("graft_st_trend_ckpt"),
+        noDataBatches) { c =>
+      graft.streaming.CurationStream.trendingTerms(staged(c, evd.schema, stage),
+        "text", "ts", windowDur = "2 minutes", delay = "1 minute", k = k)
     }
     val hhSchema = StructType(Seq(
       StructField("window_start", TimestampType),

@@ -22,7 +22,8 @@ import scala.collection.mutable
   *    first: wall span, summed executor run time, CPU time, GC time,
   *    task (de)serialization time and task count. run >> cpu means the
   *    tasks were off-CPU (I/O, locks, fsync); a span far above
-  *    run/tasks means scheduling or barrier waits.
+  *    run/tasks means scheduling or barrier waits. Each stage is
+  *    labeled with its SQL execution id and plan operators.
   *  - `--plan`: `explain("formatted")` of the unexecuted query, exactly
   *    as Spark renders it (nothing else goes to stdout).
   *  - `--show`: the first 20 result rows, untruncated.
@@ -115,7 +116,7 @@ object Inspect {
     }
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
       val s = stages.getOrElseUpdate(e.stageInfo.stageId, Stage(e.stageInfo.stageId))
-      s.name = e.stageInfo.name.take(60)
+      s.name = stageLabel(e)
       s.start = System.currentTimeMillis()
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
@@ -132,6 +133,22 @@ object Inspect {
         s.serMs += m.executorDeserializeTime + m.resultSerializationTime
       }
     }
+  }
+
+  /** What a stage ran, as plan operators: its SQL execution id and the
+    * distinct RDD scope names of its RDDs (`Exchange`,
+    * `WholeStageCodegen (3)`, …) in RDD order, e.g. `sql 12:
+    * WholeStageCodegen (3), Exchange`. The call-site name Spark gives
+    * the stage is the fallback only: under adaptive execution most
+    * stages are named after a `CompletableFuture` lambda.
+    */
+  private def stageLabel(e: SparkListenerStageSubmitted): String = {
+    val exec = Option(e.properties)
+      .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      .map("sql " + _)
+    val scopes = e.stageInfo.rddInfos.sortBy(_.id).flatMap(_.scope).map(_.name).distinct
+    if (exec.isEmpty && scopes.isEmpty) e.stageInfo.name.take(60)
+    else exec.fold("")(_ + ": ") + scopes.mkString(", ")
   }
 
   private def printJobs(name: String, wall: Double, rec: Recorder): Unit = {

@@ -47,9 +47,8 @@ object LshDecadeProbe {
     val bound = if (args.length > 2) Some(args(2).toLong) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = graft.GraftExtensions.session(s"local[$cpus]", parts.toInt)
-    bound.foreach(b =>
-      spark.conf.set("spark.graft.lsh.broadcastVerifyBound", b.toString))
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", parts.toInt,
+      bound.map(b => "spark.graft.lsh.broadcastVerifyBound" -> b.toString).toSeq: _*)
     def r3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 

@@ -72,14 +72,14 @@ object StateBackendProbe {
     names.foreach { name =>
       try {
         // baseline: default provider — the driver-oracled frame
-        spark.conf.unset(PROVIDER_CONF)
         val (hDefault, nDefault) =
           fingerprint(graft.SparkEntry.queries(name)(spark, dir))
         // production backend: RocksDB, state off-heap
-        spark.conf.set(PROVIDER_CONF, ROCKSDB)
         val t0 = System.nanoTime()
         val (hRocks, nRocks) =
-          fingerprint(graft.SparkEntry.queries(name)(spark, dir))
+          graft.GraftExtensions.isolated(spark, PROVIDER_CONF -> ROCKSDB) { rocks =>
+            fingerprint(graft.SparkEntry.queries(name)(rocks, dir))
+          }
         val sec = (System.nanoTime() - t0) / 1e9
         val ok = hRocks == hDefault && nRocks == nDefault
         println(s"""{"query":"$name","provider":"rocksdb","rows":$nRocks,""" +
@@ -87,7 +87,7 @@ object StateBackendProbe {
       } catch { case e: Throwable =>
         val msg = graft.GraftConf.jsonSafeMsg(e, 200)
         println(s"""{"query":"$name","provider":"rocksdb","error":"$msg"}""")
-      } finally spark.conf.unset(PROVIDER_CONF)
+      }
     }
     spark.stop()
   }

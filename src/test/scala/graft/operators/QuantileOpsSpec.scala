@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Pins [[QuantileOps.exactQuantiles]] bit-for-bit against Spark's own
-  * exact `percentile` aggregate (≡ DuckDB quantile_cont — that
-  * equivalence is already pinned by the a11 driver rows) on the cases
+  * exact `percentile` aggregate (DuckDB's quantile_cont can differ from
+  * both in the last bits, which is why the a11 driver rows round with
+  * `r4` before the oracle compares them) on the cases
   * that stress each branch of the bisection: interpolation between
   * neighbors, heavy ties (bucket degenerating to a point), constant
   * groups, single-row groups, all-null groups, values clustered inside
@@ -17,24 +18,24 @@ class QuantileOpsSpec extends graft.SparkSpec {
 
   private val QS = Seq(0.0, 0.25, 0.5, 0.9, 0.99, 1.0)
 
-  private def sparkExact(df: DataFrame): Map[Any, Seq[Double]] =
+  private def sparkExact(df: DataFrame, qs: Seq[Double] = QS): Map[Any, Seq[Double]] =
     df.filter(col("v").isNotNull).groupBy("g")
-      .agg(expr(s"percentile(v, array(${QS.mkString(",")}))").as("p"))
+      .agg(expr(s"percentile(v, array(${qs.mkString(",")}))").as("p"))
       .collect()
       .map(r => r.get(0) -> r.getSeq[Double](1).toVector.asInstanceOf[Seq[Double]])
       .toMap
 
   private def check(df: DataFrame, buckets: Int = 64,
-                    sliceThreshold: Int = 16): Unit = {
-    val got = QuantileOps.exactQuantiles(df, "g", "v", QS,
+                    sliceThreshold: Int = 16, qs: Seq[Double] = QS): Unit = {
+    val got = QuantileOps.exactQuantiles(df, "g", "v", qs,
       buckets = buckets, sliceThreshold = sliceThreshold)
-    val exp = sparkExact(df)
+    val exp = sparkExact(df, qs)
     val gotNonNull = got.filter(_._2 != null)
     assert(gotNonNull.keySet == exp.keySet,
       s"groups differ: got=${gotNonNull.keySet} exp=${exp.keySet}")
     exp.foreach { case (g, vs) =>
       vs.zip(gotNonNull(g)).zipWithIndex.foreach { case ((e, a), i) =>
-        assert(e == a, s"group $g q=${QS(i)}: exact=$e bisection=$a")
+        assert(e == a, s"group $g q=${qs(i)}: exact=$e bisection=$a")
       }
     }
   }
@@ -44,6 +45,13 @@ class QuantileOpsSpec extends graft.SparkSpec {
       (s"g${i % 3}", math.sin(i * 0.7) * 1000 + i * 0.013)
     }.toDF("g", "v")
     check(df)
+    // interpolation arithmetic: vf + (pos - rf) * (vc - vf) reads
+    // 38.363170881383695 for g0 at q = 0.75 where percentile() reads
+    // 38.36317088138369
+    val interp = (0 until 600).map { i =>
+      (s"g${i % 2}", math.cos(i * 0.3) * 50 + i * 0.01)
+    }.toDF("g", "v")
+    check(interp, qs = Seq(0.75, 0.9))
   }
 
   test("heavy ties: 90% of one group at a single value") {

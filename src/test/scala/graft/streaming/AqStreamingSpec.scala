@@ -253,7 +253,6 @@ class StreamBatchEquivalenceSpec extends graft.SparkSpec {
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // file-source streams need a directory: stage the table file
     val staged = java.nio.file.Files.createTempDirectory("events_stream")
     java.nio.file.Files.copy(
