@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared parsing for the `spark.graft.*` session knobs and for the
-  * bench mains' JSON error lines.
+/** Shared parsing for the `spark.graft.*` session knobs.
   *
   * The knobs are operator safety bounds (broadcast gates, cardinality
   * guards) set by operators on shared clusters — a malformed value
@@ -36,21 +35,4 @@ object GraftConf {
           s"""$key must be an integer; got "$v"""", e)
       }
     }
-
-  // backslash first, then every control char and the double quote —
-  // the char class is built from codes so no editor/tool ever turns
-  // the escapes into literal control bytes in this source file
-  private val jsonUnsafe = ("[" + 0.toChar + "-" + 31.toChar + "\"]").r
-
-  /** An exception message safe to splice into a one-line JSON string
-    * literal: backslashes and all control chars (Windows paths,
-    * multi-line Spark stack-trace messages) replaced, quotes stripped,
-    * truncated. One shared definition — the quotes-and-newline-only
-    * version of this line once emitted malformed JSON and had to be
-    * fixed in three mains at once.
-    */
-  def jsonSafeMsg(e: Throwable, maxLen: Int = 200): String =
-    jsonUnsafe.replaceAllIn(
-      Option(e.getMessage).getOrElse(e.getClass.getName).replace("\\", " "),
-      " ").take(maxLen)
 }

@@ -83,22 +83,8 @@ object Verify {
         markFailed(name, "unaccounted after global budget — cancelled straggler")
     }
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Json.write(s"$outDir/oracle_sql.json", SparkEntry.oracleSql.toSeq
+      .filter { case (name, _) => only.forall(_.contains(name)) })
     spark.stop()
     if (!failed.isEmpty) {
       import scala.jdk.CollectionConverters._

@@ -4,7 +4,7 @@ import java.io.File
 
 /** Census of the data files under a (possibly hive-partitioned) sink
   * root — the shared contract behind the file-hygiene checks
-  * (`k22_sink_hygiene`, `tools.SinkHygieneProbe`, `SinkHygieneSpec`):
+  * (`k22_sink_hygiene`, `ScaleBench sink-hygiene`, `SinkHygieneSpec`):
   * a partitionBy write emits one file per (task, partition-value)
   * pair, so files ≫ partition dirs is the fragmentation signature at
   * ANY scale. One implementation so the `part-` filter and the

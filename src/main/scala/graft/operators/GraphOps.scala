@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** Iterative graph analytics as DataFrame dataflow (the family
   * [[RelationalOps.connectedComponents]] opened; no GraphX, no RDDs).
@@ -32,6 +33,13 @@ object GraphOps {
   private[operators] def fitsOnDriver(edges: DataFrame, bound: Long): Boolean =
     bound > 0 && (if (bound < Int.MaxValue) edges.limit(bound.toInt + 1) else edges)
       .count() <= bound
+
+  /** Can the driver paths key these ids as `Long`? Only integral types
+    * cast losslessly: any other id would decay to null on the driver
+    * while the distributed path handles it fine.
+    */
+  private[operators] def integralIds(types: DataType*): Boolean =
+    types.forall(Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains)
 
   /** Weighted PageRank with uniform teleport and dangling-mass
     * redistribution.
@@ -136,9 +144,8 @@ object GraphOps {
     // of src UNION dst (Spark's common-type widening)
     val nType = e.select(col("src").as("n"))
       .union(e.select(col("dst").as("n"))).schema("n").dataType
-    val integral = Seq(e.schema("src").dataType, e.schema("dst").dataType)
-      .forall(t => Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains(t))
-    if (!integral || !fitsOnDriver(e, smallGraphEdges)) return None
+    if (!integralIds(e.schema("src").dataType, e.schema("dst").dataType) ||
+        !fitsOnDriver(e, smallGraphEdges)) return None
     val all = e.select(col("src").cast("long"), col("dst").cast("long"), col("w"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.get(2)))

@@ -406,11 +406,7 @@ object RelationalOps {
     // the label frame is cast BACK to the input id type so both paths
     // return the identical schema regardless of edge count.
     val idType = nodes.schema(idCol).dataType
-    val integralId = idType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
+    val integralId = GraphOps.integralIds(idType)
     if (integralId && GraphOps.fitsOnDriver(p, smallGraphEdges)) {
       val out = driverUnionFindLabels(nodes, idCol, p, idType)
       p.unpersist()
@@ -545,12 +541,7 @@ object RelationalOps {
       val p0 = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
         .filter(GraphOps.bothEnds("a", "b")).cache()
       val idType = nodes.schema(idCol).dataType
-      val integralId = idType match {
-        case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (integralId && GraphOps.fitsOnDriver(p0, smallGraphEdges)) {
+      if (GraphOps.integralIds(idType) && GraphOps.fitsOnDriver(p0, smallGraphEdges)) {
         val out = driverUnionFindLabels(nodes, idCol, p0, idType)
         p0.unpersist()
         return out

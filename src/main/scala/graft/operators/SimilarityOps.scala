@@ -350,7 +350,7 @@ object SimilarityOps {
     // The 4× factor keeps the r11 measured case (200k × 64 floats,
     // ~51 MB estimate) on the broadcast path while rejecting
     // estimates that only "fit" before expansion; constrained-heap
-    // callers (the 4g SpillBench regime) can opt down via the conf,
+    // callers (the 4g `ScaleBench spill` regime) can opt down via the conf,
     // and the branch-parity spec forces the shuffle shape by setting
     // it to 1.
     val bound = graft.GraftConf.sizeConf(vectors.sparkSession,
@@ -1587,7 +1587,7 @@ object SimilarityOps {
     * nprobe = nCells/2. The FAISS convention (4√n cells, nprobe a few
     * percent of them) assumes CLUSTERED embeddings; on this engine's
     * honest hard case — near-isotropic vectors — the (nCells, nprobe)
-    * grid (`tools.IvfGridProbe`, measured at n = 2k / 20k / 200k)
+    * grid (`ScaleBench ivf-grid`, measured at n = 2k / 20k / 200k)
     * shows recall is governed by the PROBED MASS (nprobe/nCells), and
     * at fixed mass FINER cells buy recall (scan ½ at 200k: 8 cells →
     * 0.79, 64 → 0.93, 256 → 0.98; at 2k: 90 cells → 0.87, 180 → 0.93)
@@ -1607,6 +1607,20 @@ object SimilarityOps {
       4 * math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
     (nCells, math.max(1, nCells / 2))
   }
+
+  /** IVF-PQ exact-rescore pool over a searched domain of `n` vectors:
+    * max(100, min(n/10, 20·⌈√n⌉)). It SCALES with the corpus: on
+    * near-isotropic geometry a FIXED candidate pool admits more
+    * imposters as n grows — measured failing at the 100× tier (200k
+    * vectors: composed recall ≈ probe-mass 0.8 × PQ@100 0.72 ≈ 0.58 <
+    * the old 0.65 pin). But candK ∝ n (the brute-force limit) makes the
+    * per-query HEAP the bottleneck instead — n/10 at the 2M tier meant
+    * 200k-entry heaps per query and wedged the decade run. √n growth is
+    * the honest middle: candidate quality climbs with the pool while
+    * the heap stays O(√n) per query (≈ 9k at 200k, 28k at 2M).
+    */
+  def ivfPqCandK(n: Long): Int =
+    math.max(100, math.min(n / 10, 20L * math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
 
   /** Inverse-selectivity probe scaling for FILTERED search (measured —
     * see `ann_ivf_pq_filtered` / BENCHNOTES r13): filtered true

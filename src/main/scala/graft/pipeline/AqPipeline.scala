@@ -287,7 +287,7 @@ object AqPipeline {
     * that survives both directions at 100 TB: AQE coalesces small
     * hash partitions (few files per dir) and SPLITS oversized ones at
     * the advisory partition size (bounded file size under date skew).
-    * Measured at the 100× set by `tools.SinkHygieneProbe`
+    * Measured at the 100× set by `ScaleBench sink-hygiene`
     * (BENCHNOTES round-12): 8.0 → 1.0 files per partition dir, mean
     * file 0.96 → 6.85 MB, write 9.2 → 5.9 s (clustering also
     * compresses better: 230 → 205 MB total).

@@ -513,7 +513,7 @@ object PipelineQueries extends QueryPack {
   // VALUE it holds, so an unclustered partitionBy emits
   // tasks × touched-partitions files. The shipped cure is the AQE
   // `rebalance` hint on the partition columns (measured at the 100×
-  // tier by tools.SinkHygieneProbe: 240 → 30 files, 1.6× faster
+  // tier by `ScaleBench sink-hygiene`: 240 → 30 files, 1.6× faster
   // write, 11% smaller bytes). This row makes the contract
   // regression-proof: it writes the day-partitioned events sink the
   // way AqPipeline does, CENSUSES the files it wrote, and folds the
@@ -2952,7 +2952,7 @@ object PipelineQueries extends QueryPack {
   // Same restart harness on the PRODUCTION state backend: recovery
   // must replay RocksDB snapshot+changelog files for the windowed
   // aggregate's state store instead of the default provider's HDFS
-  // delta files. StateBackendProbe measures all four stateful
+  // delta files. `ScaleBench state-backend` measures all four stateful
   // families under RocksDB at a 4 g heap; this row puts the
   // windowed-agg × restart × RocksDB combination inside the oracle
   // gate so a provider-specific recovery regression turns a
@@ -3058,7 +3058,7 @@ object PipelineQueries extends QueryPack {
   // §2.9 streaming-state BOUND inside the oracle gate. The eleven
   // parity rows pin WHAT the stateful operators emit; the claim that
   // makes them deployable at 100 TB — state ∝ watermark window, NOT
-  // stream length — lived only in tools.StreamThroughputProbe's
+  // stream length — lived only in `ScaleBench stream`'s
   // printed census. This row hashes it: events drain through
   // withWatermark(3 days) + dropDuplicates(event_id) in four
   // time-ordered micro-batches over a 30-day span (a REAL watermark —

@@ -322,8 +322,8 @@ object SimQueries extends QueryPack {
   // join over its probed cells (never all-pairs), and inside probed
   // cells candidates are scored by the native PQ-ADC over 16-byte
   // codes, candK=max(100, min(n/10, 20·⌈√n⌉)) exact-rescored (candK
-  // must scale — see the call-site comment). GEOMETRY is the measured
-  // knee from tools.IvfGridProbe (see SimilarityOps.ivfPqGeometry):
+  // must scale — see SimilarityOps.ivfPqCandK). GEOMETRY is the measured
+  // knee from `ScaleBench ivf-grid` (see SimilarityOps.ivfPqGeometry):
   // nCells = min(n/4, 4√n), nprobe = nCells/2 — on this near-isotropic
   // corpus recall tracks probed mass; finer cells raise it at fixed mass
   // (200k grid, scan ½: 8 cells → 0.79, 64 → 0.93, 256 → 0.98), so
@@ -341,17 +341,7 @@ object SimQueries extends QueryPack {
     val n = emb.count()
     val sample = emb.filter(
       col("vec_id") % SimilarityOps.sampleModulus(n, 64) === 0)
-    // candK SCALES with the corpus: on near-isotropic geometry a
-    // FIXED candidate pool admits more imposters as n grows —
-    // measured failing at the 100× tier (200k vectors: composed
-    // recall ≈ probe-mass 0.8 × PQ@100 0.72 ≈ 0.58 < the old 0.65
-    // pin). But candK ∝ n (the brute-force limit) makes the per-query
-    // HEAP the bottleneck instead — n/10 at the 2M tier meant
-    // 200k-entry heaps per query and wedged the decade run. √n growth
-    // is the honest middle: candidate quality climbs with the pool
-    // while the heap stays O(√n) per query (≈ 9k at 200k, 28k at 2M).
-    val candK = math.max(100, math.min(n / 10,
-      20L * math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
+    val candK = SimilarityOps.ivfPqCandK(n)
     val (nCells, nprobe) = SimilarityOps.ivfPqGeometry(n)
     // modulus 1 = "sample is the whole corpus": pass None so the build
     // reuses trainIvf's own final assignment instead of paying a
@@ -406,8 +396,7 @@ object SimQueries extends QueryPack {
     val (dim, m, ksub) = (64, 16, 32)
     // the index serves the UNION, so geometry/candK follow the full
     // corpus size — the same laws as ann_ivf_pq
-    val candK = math.max(100, math.min(n / 10,
-      20L * math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
+    val candK = SimilarityOps.ivfPqCandK(n)
     val (nCells, nprobe) = SimilarityOps.ivfPqGeometry(n)
     val tsMod = SimilarityOps.sampleModulus(nBase, math.max(512, 32 * nCells))
     val (cents, codebook, codes) = SimilarityOps.buildIvfPq(
@@ -494,8 +483,7 @@ object SimQueries extends QueryPack {
     val sample = emb.filter(
       col("vec_id") % SimilarityOps.sampleModulus(n, 64) === 0)
     // candK law on the FILTERED count: the pool the heap draws from
-    val candK = math.max(100, math.min(nF / 10,
-      20L * math.ceil(math.sqrt(nF.toDouble)).toLong)).toInt
+    val candK = SimilarityOps.ivfPqCandK(nF)
     val (nCells, nprobe) = SimilarityOps.ivfPqGeometry(n)
     // inverse-selectivity probe scaling — see the row comment
     val nprobeF = SimilarityOps.filteredNprobe(nCells, nprobe, n, nF)
@@ -668,7 +656,7 @@ object SimQueries extends QueryPack {
   }
 
   // Embedding-SKEW robustness under the bucket cap — the r11
-  // VecSkewProbe contract promoted to a driver-hashed row. A planted
+  // `ScaleBench vec-skew` contract promoted to a driver-hashed row. A planted
   // hot cluster (vec_id % 5 = 2, 20% of the corpus, all sharing ONE
   // exact vector — duplicated-asset skew, where every hot-hot pair is
   // a true near-dup and a naive miner pays the (n/5)²/2 quadratic

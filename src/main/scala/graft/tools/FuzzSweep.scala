@@ -1,8 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
-
 import graft.queries.QueryFuzz
 
 /** Value-level CROSS-ENGINE sweep of the differential fuzzer: render
@@ -50,22 +47,9 @@ object FuzzSweep {
         System.err.println(s"[fuzz-sweep] $name FAILED: ${e.getMessage}")
       }
     }
-    // same escape as graft.Verify's oracle dump (quote + backslash +
-    // all control chars — generated SQL embeds newlines)
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = sqls.result().map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{\n", ",\n", "\n}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    println(s"""{"probe":"fuzz_sweep","family":"${args(0)}","sf":"$sfDir",""" +
-      s""""seeds":$nSeeds,"written":${sqls.result().size},"failed":$failed}""")
+    graft.Json.write(s"$outDir/oracle_sql.json", sqls.result())
+    println(graft.Json.line(Seq("probe" -> "fuzz_sweep", "family" -> args(0), "sf" -> sfDir,
+      "seeds" -> nSeeds, "written" -> sqls.result().size, "failed" -> failed)))
     spark.stop()
     if (failed > 0) sys.exit(1)
   }

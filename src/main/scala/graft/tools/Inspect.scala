@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import scala.collection.mutable
@@ -23,7 +24,8 @@ import scala.collection.mutable
   *    task (de)serialization time and task count. run >> cpu means the
   *    tasks were off-CPU (I/O, locks, fsync); a span far above
   *    run/tasks means scheduling or barrier waits. Each stage is
-  *    labeled with its SQL execution id and plan operators.
+  *    labeled with its SQL execution id and plan operators (outside
+  *    SQL, with Spark's stage name and its RDD scopes).
   *  - `--plan`: `explain("formatted")` of the unexecuted query, exactly
   *    as Spark renders it (nothing else goes to stdout).
   *  - `--show`: the first 20 result rows, untruncated.
@@ -74,31 +76,42 @@ object Inspect {
         println(s"""{"query":"$name","sec":$sec,"sf":"$sfDir"}""")
       case _ =>
         run() // codegen warm — profile steady state, not Janino
-        val rec = new Recorder
-        spark.sparkContext.addSparkListener(rec)
-        val t0 = System.nanoTime()
-        run()
-        val wall = secs(t0)
-        // the listener bus is asynchronous: wait (up to 10 s) until every
-        // started job and every submitted stage has reported its end
-        val deadline = System.nanoTime() + 10e9.toLong
-        while (rec.pending && System.nanoTime() < deadline) Thread.sleep(50)
-        spark.sparkContext.removeSparkListener(rec)
+        val (wall, rec) = record(spark) { val t0 = System.nanoTime(); run(); secs(t0) }
         if (mode == "--jobs") printJobs(name, wall, rec) else printStages(name, wall, rec)
     }
     spark.stop()
   }
 
-  private final case class Job(id: Int, start: Long, stages: Int, tasks: Int,
-                               desc: String, var end: Long = 0L)
-  private final case class Stage(id: Int, var name: String = "",
-                                 var start: Long = 0L, var end: Long = 0L,
-                                 var tasks: Int = 0, var runMs: Long = 0L,
-                                 var cpuMs: Long = 0L, var gcMs: Long = 0L,
-                                 var serMs: Long = 0L)
+  /** `body`'s result and what a [[Recorder]] on `spark` saw while it ran. */
+  private[graft] def record[T](spark: SparkSession)(body: => T): (T, Recorder) = {
+    val rec = new Recorder
+    spark.sparkContext.addSparkListener(rec)
+    try {
+      val out = body
+      // the listener bus is asynchronous: wait (up to 10 s) until every
+      // started job and every submitted stage has reported its end
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (rec.pending && System.nanoTime() < deadline) Thread.sleep(50)
+      (out, rec)
+    } finally spark.sparkContext.removeSparkListener(rec)
+  }
+
+  private[graft] final case class Job(id: Int, start: Long, stages: Int, tasks: Int,
+                                      desc: String, var end: Long = 0L)
+  /** One stage's task metrics, summed over its tasks; `peakMemBytes` is
+    * the largest task's peak execution memory.
+    */
+  private[graft] final case class Stage(id: Int, var name: String = "",
+                                        var start: Long = 0L, var end: Long = 0L,
+                                        var tasks: Int = 0, var runMs: Long = 0L,
+                                        var cpuMs: Long = 0L, var gcMs: Long = 0L,
+                                        var serMs: Long = 0L, var memSpilledBytes: Long = 0L,
+                                        var diskSpilledBytes: Long = 0L,
+                                        var peakMemBytes: Long = 0L,
+                                        var shuffleWriteBytes: Long = 0L)
 
   /** Jobs and stages of the instrumented run, from one listener. */
-  private final class Recorder extends SparkListener {
+  private[graft] final class Recorder extends SparkListener {
     val jobs = mutable.ArrayBuffer[Job]()
     val stages = mutable.LinkedHashMap[Int, Stage]()
 
@@ -131,6 +144,10 @@ object Inspect {
         s.cpuMs += m.executorCpuTime / 1000000L
         s.gcMs += m.jvmGCTime
         s.serMs += m.executorDeserializeTime + m.resultSerializationTime
+        s.memSpilledBytes += m.memoryBytesSpilled
+        s.diskSpilledBytes += m.diskBytesSpilled
+        s.peakMemBytes = math.max(s.peakMemBytes, m.peakExecutionMemory)
+        s.shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
       }
     }
   }
@@ -138,17 +155,20 @@ object Inspect {
   /** What a stage ran, as plan operators: its SQL execution id and the
     * distinct RDD scope names of its RDDs (`Exchange`,
     * `WholeStageCodegen (3)`, …) in RDD order, e.g. `sql 12:
-    * WholeStageCodegen (3), Exchange`. The call-site name Spark gives
-    * the stage is the fallback only: under adaptive execution most
-    * stages are named after a `CompletableFuture` lambda.
+    * WholeStageCodegen (3), Exchange`. Under adaptive execution most
+    * stages are named after a `CompletableFuture` lambda, so the
+    * call-site name Spark gives the stage leads only where there is no
+    * execution id: the metadata stages of a read (`parquet at
+    * Tables.scala:43: parallelize, mapPartitions`) carry RDD scopes
+    * that alone do not say which read they serve.
     */
   private def stageLabel(e: SparkListenerStageSubmitted): String = {
     val exec = Option(e.properties)
       .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
       .map("sql " + _)
     val scopes = e.stageInfo.rddInfos.sortBy(_.id).flatMap(_.scope).map(_.name).distinct
-    if (exec.isEmpty && scopes.isEmpty) e.stageInfo.name.take(60)
-    else exec.fold("")(_ + ": ") + scopes.mkString(", ")
+    val head = exec.getOrElse(e.stageInfo.name.take(60))
+    if (scopes.isEmpty) head else head + ": " + scopes.mkString(", ")
   }
 
   private def printJobs(name: String, wall: Double, rec: Recorder): Unit = {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * on plan shape and complexity argument. This main writes a
   * schema-identical synthetic set at an arbitrary multiple of sf0.1
   * (default 10×) so the claims can be MEASURED: run
-  * [[graft.ScaleBench]] at sf0.1 and at the generated dir and compare
+  * `graft.ScaleBench ratio` at sf0.1 and at the generated dir and compare
   * per-query time ratios (≤ ~linear for the O(n)/O(n·s) paths) and the
   * self-checking recall/exactness booleans as n grows.
   *
@@ -80,7 +80,7 @@ object StressGen {
     // hot buckets' candidate work while recall on the UNCAPPED
     // remainder (the normal 1.5% near-dup population, which this mode
     // keeps intact on the other 95%) holds. Isolated from key skew on
-    // purpose: one variable per tier (tools.VecSkewProbe measures it).
+    // purpose: one variable per tier (`ScaleBench vec-skew` measures it).
     val vskew = modes("vskew")
     // "embonly" mode: write only the embeddings table — the
     // PQ/LSH decade probes read nothing else, and the full 1000× set

@@ -1,0 +1,148 @@
+package graft
+
+import scala.collection.mutable.ArrayBuffer
+
+/** Every [[ScaleBench]] subcommand on the shared test session over the
+  * smallest testdata set, with small arguments: each record carries
+  * the keys the subcommand has always printed (in order), the
+  * self-checks that must hold at any scale hold, and recalls are
+  * fractions. The recall values themselves are not pinned: this set
+  * has 500 vectors.
+  */
+class ScaleBenchSpec extends SparkSpec {
+  private val sf = "/root/testdata/sf0.001"
+
+  private def run(cmd: String, args: String*): Seq[Seq[(String, Any)]] = {
+    val out = ArrayBuffer.empty[Seq[(String, Any)]]
+    ScaleBench.commands(cmd)(spark, args, out += _)
+    out.toSeq
+  }
+  private def keys(rec: Seq[(String, Any)]): Seq[String] = rec.map(_._1)
+  private def fraction(rec: Seq[(String, Any)], key: String): Unit = {
+    val v = rec.toMap.apply(key).asInstanceOf[Double]
+    assert(v >= 0.0 && v <= 1.0, s"$key = $v")
+  }
+
+  test("ratio: times a query at both dirs, its *_ok checks hold on both") {
+    val Seq(r) = run("ratio", sf, sf, "ann_lsh_topk")
+    assert(keys(r) == Seq("query", "small_sec", "big_sec", "ratio", "checks_small", "checks_big"), r)
+    assert(r.toMap.apply("checks_small") == true && r.toMap.apply("checks_big") == true)
+  }
+
+  test("spill: a header, then the task counters of one run per query") {
+    val Seq(head, r) = run("spill", sf, "ann_lsh_topk")
+    assert(keys(head) == Seq("sweep", "heap", "cpus", "shuffle_partitions", "dir"))
+    assert(head.toMap.apply("cpus") == 4 && head.toMap.apply("shuffle_partitions") == 4)
+    assert(keys(r) == Seq("query", "sec", "spill_mem_mb", "spill_disk_mb",
+      "peak_task_mem_mb", "gc_sec", "shuffle_write_mb", "checks"), r)
+    assert(r.toMap.apply("checks") == true)
+    // the query shuffles, so the recorder saw its tasks
+    assert(r.toMap.apply("shuffle_write_mb").asInstanceOf[Double] > 0.0)
+    assert(r.toMap.apply("peak_task_mem_mb").asInstanceOf[Double] > 0.0)
+  }
+
+  test("a failing query is an error record, and the sweep goes on") {
+    val Seq(bad, good) = run("ratio", sf, sf, "no_such_query,ann_lsh_topk")
+    assert(keys(bad) == Seq("query", "error"))
+    assert(keys(good).contains("ratio"))
+  }
+
+  test("recall: LSH top-k and pair recall against the brute-force twins") {
+    val Seq(r) = run("recall", sf)
+    assert(keys(r) == Seq("n", "bits", "topk_recall", "pair_recall", "exact_pairs", "sf"))
+    assert(r.toMap.apply("n") == 500L)
+    fraction(r, "topk_recall")
+    fraction(r, "pair_recall")
+  }
+
+  test("pq: two candK lines, then the composed IVF-PQ line") {
+    val Seq(a, b, ivf) = run("pq", sf)
+    for (r <- Seq(a, b)) {
+      assert(keys(r) == Seq("probe", "dir", "n", "candk", "train_sec", "encode_sec",
+        "search_sec", "twin_sec", "n_exact", "recall"), r)
+      fraction(r, "recall")
+    }
+    assert(Seq(a, b).map(_.toMap.apply("candk")) == Seq(100, 1000))
+    assert(keys(ivf) == Seq("probe", "dir", "n", "nprobe", "cells", "candk",
+      "end_to_end_sec", "n_exact", "recall"), ivf)
+    fraction(ivf, "recall")
+  }
+
+  test("ivfpq: the gate row's laws, plain, append and filtered") {
+    val base = Seq("probe", "dir", "n", "cells", "nprobe", "candk", "build_sec")
+    val tail = Seq("search_sec", "twin_sec", "n_exact", "recall", "recall_ok")
+    val Seq(plain) = run("ivfpq", sf)
+    assert(keys(plain) == base ++ tail, plain)
+    // n = 500: candK = max(100, min(50, 20·23))
+    assert(plain.toMap.apply("candk") == 100)
+    val Seq(app) = run("ivfpq", sf, "append")
+    assert(keys(app) == base ++ Seq("append_sec", "n_base") ++ tail, app)
+    assert(app.toMap.apply("probe") == "ivfpq_append_decade")
+    val Seq(filt) = run("ivfpq", sf, "filtered")
+    assert(keys(filt) == base ++ Seq("n_pass", "violations") ++ tail, filt)
+    assert(filt.toMap.apply("violations") == 0L)
+    Seq(plain, app, filt).foreach(fraction(_, "recall"))
+  }
+
+  test("ivf-grid: one line per nprobe up to half the cells") {
+    val recs = run("ivf-grid", sf, "8")
+    assert(recs.map(_.toMap.apply("nprobe")) == Seq(1, 2, 4))
+    recs.foreach { r =>
+      assert(keys(r) == Seq("probe", "dir", "n", "cells", "nprobe", "scan_frac", "candk",
+        "build_sec", "search_sec", "n_exact", "recall"), r)
+      fraction(r, "recall")
+    }
+  }
+
+  test("lsh: near-dup mining with the verify bound on a clone of the session") {
+    val bound = "spark.graft.lsh.broadcastVerifyBound"
+    val Seq(r) = run("lsh", sf, "0.8", "1")
+    assert(keys(r) == Seq("probe", "dir", "n", "tau", "pairs", "mine_sec", "pinned",
+      "recall", "recall_ok"), r)
+    fraction(r, "recall")
+    assert(spark.conf.getOption(bound).isEmpty)
+  }
+
+  test("vec-skew: hot coverage and remainder recalls") {
+    val Seq(r) = run("vec-skew", sf)
+    assert(keys(r) == Seq("probe", "dir", "n", "min_sim", "n_hot", "mine_sec", "lsh_pairs",
+      "hot_true_pairs", "hot_pair_coverage", "remainder_pinned", "remainder_recall",
+      "topk_pinned", "topk_remainder_recall"), r)
+    Seq("hot_pair_coverage", "remainder_recall", "topk_remainder_recall").foreach(fraction(r, _))
+  }
+
+  test("stream: three pipelines drain a two-file backlog on RocksDB") {
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val before = spark.conf.getOption(provider)
+    val head +: pipes = run("stream", sf, "2", "rocksdb")
+    assert(keys(head) == Seq("probe", "dir", "rows", "files", "cpus", "provider"))
+    assert(pipes.map(_.toMap.apply("pipeline")) ==
+      Seq("watermark_dedup", "hourly_window_agg", "sessionize_fmgws"))
+    pipes.foreach { r =>
+      assert(keys(r) == Seq("pipeline", "provider", "rows", "sec", "rows_per_sec",
+        "batches", "state_rows", "state_dir_mb"), r)
+      assert(r.toMap.apply("batches") == 2)
+    }
+    assert(spark.conf.getOption(provider) == before)
+  }
+
+  test("state-backend: RocksDB output matches the default provider's") {
+    val Seq(head, r) = run("state-backend", sf, "st_restart_agg_parity")
+    assert(keys(head) == Seq("probe", "heap", "dir"))
+    assert(keys(r) == Seq("query", "provider", "rows", "rows_default", "match", "sec"), r)
+    assert(r.toMap.apply("match") == true)
+  }
+
+  test("sink-hygiene: the rebalanced sink writes few files per partition dir") {
+    val Seq(plain, rebalanced) = run("sink-hygiene", sf)
+    for (r <- Seq(plain, rebalanced))
+      assert(keys(r) == Seq("sink", "part_dirs", "files", "total_mb", "mean_mb",
+        "files_per_dir", "sec", "hygiene_ok"), r)
+    assert(rebalanced.toMap.apply("hygiene_ok") == true)
+  }
+
+  test("records are one JSON line each, strings escaped") {
+    assert(Json.line(Seq("query" -> "a\"b\n", "sec" -> 1.5, "n" -> 3L, "ok" -> true)) ==
+      """{"query":"a\"b\n","sec":1.5,"n":3,"ok":true}""")
+  }
+}

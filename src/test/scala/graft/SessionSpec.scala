@@ -41,6 +41,14 @@ class SessionSpec extends SparkSpec {
     assert(activeHits == List("graft/GraftExtensions.scala: def isolated"), activeHits.mkString("\n"))
   }
 
+  test("the entry points are exactly the ten mains") {
+    val mains = scan("""def main\(""".r).map(_.takeWhile(_ != ':')).toSet
+    assert(mains == Set("graft/Bench.scala", "graft/Plans.scala", "graft/Smoke.scala",
+      "graft/Verify.scala", "graft/ScaleBench.scala", "graft/pipeline/AqDemo.scala",
+      "graft/pipeline/CurationPipeline.scala", "graft/tools/FuzzSweep.scala",
+      "graft/tools/Inspect.scala", "graft/tools/StressGen.scala"), mains.toSeq.sorted.mkString("\n"))
+  }
+
   test("the test session is built through it: extensions, no-fork local FS, UTC") {
     assert(spark.catalog.functionExists("float_vec_dot"))
     assert(spark.sparkContext.hadoopConfiguration.get("fs.file.impl") ==

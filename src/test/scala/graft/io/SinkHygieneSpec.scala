@@ -8,7 +8,7 @@ import graft.SparkSpec
 /** File hygiene of the partitioned sinks — the positive AND negative
   * shape of the AQE `rebalance(partitionCols)` contract that
   * `k22_sink_hygiene` pins in the oracle gate and
-  * `tools.SinkHygieneProbe` measures at the 100× tier.
+  * `ScaleBench sink-hygiene` measures at the 100× tier.
   *
   * The failure mode (the reference's own documented production issue,
   * doc/GLUE_JOBS_GUIDE.md:310,404-407) is structural: a partitionBy

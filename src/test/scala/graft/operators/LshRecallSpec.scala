@@ -248,7 +248,7 @@ class LshRecallSpec extends SparkSpec {
     // the sf0.1 operating point: autoBitsPerBand(2000) = 6 — wider
     // bands than the 5-bit floor the other specs exercise. Recall must
     // survive the bucket growth (this is the spec version of the
-    // RecallCheck measurement: 0.92 top-k / 0.99 pair at sf0.1).
+    // `ScaleBench recall` measurement: 0.92 top-k / 0.99 pair at sf0.1).
     val big = (0 until 1810).map(i => (20000L + i, randVec()))
     val corpus = planted.union(big.toDF("vec_id", "embedding")) // 150+40+1810 = 2000
     val exact = pairSet(SimilarityOps.cosinePairs(corpus, "vec_id", "embedding", 0.8))
