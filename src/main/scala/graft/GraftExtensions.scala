@@ -98,8 +98,8 @@ object GraftExtensions {
 
   /** The one place a graft session is built: extensions (asserted),
     * UTC session time zone, no UI, the no-fork local filesystem,
-    * nanos-as-long parquet timestamps and WARN logging, plus the
-    * caller's own `extraConf`.
+    * nanos-as-long parquet timestamps, artifact isolation off and WARN
+    * logging, plus the caller's own `extraConf`.
     *
     * The local filesystem pair (graft.io.NioLocalFileSystem scaladoc):
     * Hadoop's shell-backed chmod/readlink forks a process per created
@@ -120,6 +120,12 @@ object GraftExtensions {
       // `events.ts` has shipped as parquet TIMESTAMP(NANOS), which the
       // reader only accepts as a long (Tables.normalizeEventsTs)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // graft adds no jars or files to a session. With isolation on
+      // (Spark's default) each session id gets its own executor
+      // classloader, and compiled generated classes are cached per
+      // classloader, so every clone ([[isolated]], each streaming
+      // query's run) recompiled every class its plans need
+      .config("spark.sql.artifact.isolation.enabled", "false")
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     assertWired(s)

@@ -134,6 +134,31 @@ object AqStreaming {
     * see its own batch). Readers that need the batch transform's
     * one-row-per-key shape run [[mergePartialRows]] on read, or as a
     * Maintenance-style compaction that rewrites the partition.
+    *
+    * TWO SESSIONS, ONE EXECUTION PER BATCH. Every `start()` runs the
+    * stream on a fresh clone of `spark`. The stateful part stays there,
+    * inside the batch's RDD: the file source, the watermarked dedup and
+    * its state-store commit, so checkpoint, watermark and once-per-file
+    * semantics are the stream's own. [[AqPipeline.martRows]] and the
+    * write run on `spark` itself, over those rows, as the batch's one
+    * SQL execution: that execution's tasks also run the stateful part,
+    * consuming the batch exactly once, the empty no-data batch
+    * included (an empty batch writes no file to a partitioned sink).
+    * Two reasons:
+    *   - Spark keeps compiled generated classes per task classloader,
+    *     and with `spark.sql.artifact.isolation.enabled` on (Spark's
+    *     default) each session id gets its own executor classloader.
+    *     A batch executed on the stream's session recompiles its
+    *     classes on every `start()` (34 compilations per tick of the
+    *     benchmark's hourly ingest); on the caller's session they
+    *     compile on the first tick only, and the one class a later
+    *     tick compiles is the state operator's watermark predicate,
+    *     whose literal changes every batch.
+    *   - Spark turns adaptive execution off on the stream's session
+    *     (its stateful operators need a fixed partitioning). On
+    *     `spark` it is on, so the small per-batch shuffle coalesces to
+    *     one task, and the batch writes one file per day touched
+    *     instead of one per shuffle partition.
     */
   def streamToMart(spark: SparkSession, rawPath: String, martPath: String,
                    checkpoint: String): DataStreamWriter[Row] = {
@@ -143,15 +168,8 @@ object AqStreaming {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // two consumers of the same files (isEmpty probe, martRows) —
-        // persist so the NDJSON parses once per trigger, not twice
-        // (same reason readRawQuarantine caches)
-        batch.persist()
-        try {
-          if (!batch.isEmpty)
-            AqPipeline.martRows(batch).write.mode("append")
-              .partitionBy("year", "month", "day").parquet(martPath)
-        } finally { batch.unpersist(); () }
+        AqPipeline.martRows(spark.createDataFrame(batch.rdd, batch.schema))
+          .write.mode("append").partitionBy("year", "month", "day").parquet(martPath)
       }
   }
 
