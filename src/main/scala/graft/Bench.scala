@@ -20,6 +20,50 @@ package graft
   * for stable attribution.
   */
 object Bench {
+  /** The final line's queries. The bench runner keeps only the last
+    * ~2000 chars of stdout; a 115-query map blows past that window and
+    * truncates the JSON mid-line (the exact failure in BENCH_r02/r03:
+    * "parsed": null), so the FINAL line carries these alone, at 3
+    * decimals, sized to always fit inside the tail window.
+    */
+  private[graft] val headline = Seq(
+    "pipe_mart", "pipe_curate", "j6_star_join", "j5_asof_join",
+    "k1_partitioned_sink", "s1_ndjson_roundtrip", "a1_pivot",
+    "w4_sessionize", "er_golden_records", "fz_edit_pairs",
+    "dd_minhash_lsh", "dd_ngram_jaccard", "dd_simhash", "dd_clusters",
+    "dd_embedding_lsh", "ann_lsh_topk", "ann_two_stage", "tx_tfidf",
+    "tx_lm_gate", "scd2_intervals", "t1_tumbling_hourly",
+    "tx_bpe_train", "gr_triangles", "dd_chunk_dedup", "dd_bloom_incremental",
+    "j11_spatial_join", "a11_tdigest_rollup", "sql_recursive_cte",
+    "dq_profile", "ml_feature_hash", "dd_repeated_spans", "ann_pca_topk",
+    "ann_pq_topk", "ann_ivf_pq", "ann_ivf_pq_append",
+    // r14 additions (additions only — never remove/rename): the
+    // paths this round optimized, so future rounds get per-query
+    // tracking of them. Line-size check: 43 entries ≈ 1.3 KB, inside
+    // the runner's ~2000-char stdout tail window (`BenchSpec`).
+    "st_join_parity", "st_join_skew_parity", "st_restart_agg_parity",
+    "st_sessionize_parity", "gr_pagerank", "gr_components_star",
+    "gr_bfs", "a11_tdigest_weighted")
+
+  /** The two stdout lines of a run: the full per-query detail (for
+    * humans reading the run log), then the compact summary the bench
+    * runner parses. `results` holds each timed query's min-of-3 seconds in
+    * run order, `failed` the queries that threw.
+    */
+  private[graft] def lines(results: Seq[(String, Double)], failed: Seq[String],
+                           sfDir: String): Seq[String] = {
+    val total = results.map(_._2).sum
+    val byName = results.toMap
+    Seq(
+      Json.line(Seq("metric" -> "total_detail", "value" -> total, "unit" -> "sec",
+        "queries" -> Json.obj(results), "failed" -> java.util.List.of(failed: _*),
+        "sf" -> sfDir)),
+      Json.line(Seq("metric" -> "total", "value" -> Json.seconds(total), "unit" -> "sec",
+        "n_queries" -> results.size, "n_failed" -> failed.size,
+        "queries" -> Json.obj(headline.flatMap(n => byName.get(n).map(v => n -> Json.seconds(v)))),
+        "sf" -> sfDir)))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -76,12 +120,8 @@ object Bench {
       watchdog.schedule(kill, budgetMs)
       try {
         materialize(name, sfDir) // codegen warm; a genuinely broken query throws here
-        val timed = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          materialize(name, sfDir)
-          (System.nanoTime() - t0) / 1e9
-        }
-        Some(name -> timed.min)
+        val secs = (1 to 3).map(_ => Timer.timed(materialize(name, sfDir))._2)
+        Some(name -> secs.min)
       } catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         failures(name) = msg
@@ -93,42 +133,7 @@ object Bench {
         clearState()
       }
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // Full per-query detail (for humans reading the run log).
-    val fs = failures.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"total_detail","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"sf":"$sfDir"}""")
-    // The driver keeps only the last ~2000 chars of stdout; a 115-query
-    // map blows past that window and truncates the JSON mid-line (the
-    // exact failure in BENCH_r02/r03: "parsed": null). The FINAL line is
-    // therefore a compact summary — headline queries only, 3-decimal
-    // seconds — sized to always fit inside the tail window.
-    val headline = Seq(
-      "pipe_mart", "pipe_curate", "j6_star_join", "j5_asof_join",
-      "k1_partitioned_sink", "s1_ndjson_roundtrip", "a1_pivot",
-      "w4_sessionize", "er_golden_records", "fz_edit_pairs",
-      "dd_minhash_lsh", "dd_ngram_jaccard", "dd_simhash", "dd_clusters",
-      "dd_embedding_lsh", "ann_lsh_topk", "ann_two_stage", "tx_tfidf",
-      "tx_lm_gate", "scd2_intervals", "t1_tumbling_hourly",
-      "tx_bpe_train", "gr_triangles", "dd_chunk_dedup", "dd_bloom_incremental",
-      "j11_spatial_join", "a11_tdigest_rollup", "sql_recursive_cte",
-      "dq_profile", "ml_feature_hash", "dd_repeated_spans", "ann_pca_topk",
-      "ann_pq_topk", "ann_ivf_pq", "ann_ivf_pq_append",
-      // r14 additions (additions only — never remove/rename): the
-      // paths this round optimized, so future rounds get per-query
-      // driver tracking of them. Line-size check: 43 entries ≈ 1.3 KB,
-      // inside the driver's ~2000-char stdout tail window.
-      "st_join_parity", "st_join_skew_parity", "st_restart_agg_parity",
-      "st_sessionize_parity", "gr_pagerank", "gr_components_star",
-      "gr_bfs", "a11_tdigest_weighted")
-    val byName = results.toMap
-    // Locale.ROOT: the f-interpolator honors the default locale, and a
-    // comma decimal separator would make the JSON line unparseable
-    def r3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val hs = headline.flatMap(n => byName.get(n).map(v => "\"" + n + "\":" + r3(v)))
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failures.size},"queries":$hs,"sf":"$sfDir"}""")
+    lines(results, failures.keys.toSeq, sfDir).foreach(println)
     spark.stop()
     if (failures.nonEmpty) {
       System.err.println(

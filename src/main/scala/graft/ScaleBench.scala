@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.BooleanType
 
+import graft.Timer.timed
 import graft.operators.SimilarityOps
 import graft.tools.Inspect
 
@@ -81,13 +82,6 @@ object ScaleBench {
   }
 
   // ---- shared helpers --------------------------------------------------
-
-  /** `body`'s result and the seconds it took. */
-  private def timed[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val out = body
-    (out, (System.nanoTime() - t0) / 1e9)
-  }
 
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** EPA AQI piecewise-linear interpolation (SURVEY §2.10; reference
@@ -12,6 +12,13 @@ import org.apache.spark.sql.functions._
   * Formula: AQI = (Ahi-Alo)/(Chi-Clo)*(C-Clo)+Alo over the pollutant's
   * breakpoint row; >highest range extrapolates uncapped (plan :73);
   * negative/null → null (plan :69-72).
+  *
+  * [[score]] is the one way to put AQI columns on a frame: it evaluates
+  * each pollutant's chain once. [[rowAqi]], [[dominantPollutant]] and
+  * [[aqiLevel]] over raw concentration columns are the column-level
+  * reference it is checked against (`AqiScoreSpec`), not a second way
+  * to score: composed, they inline every chain again wherever `overall`
+  * is compared (ten copies of each chain for seven pollutants).
   */
 object Aqi {
 
@@ -112,24 +119,79 @@ object Aqi {
 
   /** Row AQI = max over per-pollutant AQIs computed with each
     * pollutant's own EPA table (plan :38); null-skipping via
-    * `greatest`.
+    * `greatest`. The column-level reference for [[score]].
     */
   def rowAqi(named: (String, Column)*): Column = {
-    val aqis = named.map { case (n, c) => pollutantAqi(n, c) }
-    // Spark's greatest() demands >= 2 args — a one-pollutant caller
-    // should get that pollutant's AQI, not an analysis error
-    if (aqis.size == 1) aqis.head else greatest(aqis: _*)
+    // a one-pollutant caller gets that pollutant's AQI, not the
+    // analysis error of a one-argument greatest()
+    overall(named.map { case (n, c) => pollutantAqi(n, c) })
   }
 
-  /** Dominant pollutant = argmax by AQI (plan :63), as a when-chain. */
+  /** Dominant pollutant = argmax by AQI (plan :63), as a when-chain.
+    * The column-level reference for [[score]]: it builds every chain
+    * again.
+    */
   def dominantPollutant(named: (String, Column)*): Column = {
     val aqis = named.map { case (n, c) => n -> pollutantAqi(n, c) }
-    val overall =
-      if (aqis.size == 1) aqis.head._2 else greatest(aqis.map(_._2): _*)
-    aqis.foldRight(lit(null).cast("string")) { case ((n, a), tail) =>
-      when(a.isNotNull && a === overall, lit(n)).otherwise(tail)
-    }
+    firstEqual(aqis, overall(aqis.map(_._2)))
   }
+
+  // Spark's greatest() demands >= 2 args
+  private def overall(aqis: Seq[Column]): Column =
+    if (aqis.size == 1) aqis.head else greatest(aqis: _*)
+
+  // the first name, in order, whose AQI is non-null and equals `top`
+  private def firstEqual(aqis: Seq[(String, Column)], top: Column): Column =
+    aqis.foldRight(lit(null).cast("string")) { case ((n, a), tail) =>
+      when(a.isNotNull && a === top, lit(n)).otherwise(tail)
+    }
+
+  /** `df` with the overall AQI, its level and the dominant pollutant
+    * (`aqi`, `aqi_level`, `dominant_pollutant`), each chain evaluated
+    * once: the same values as
+    * `rowAqi(named)`, `aqiLevel(rowAqi(named))` and
+    * `dominantPollutant(named)`, bit for bit. `named` pairs each
+    * pollutant (first wins a tie) with its concentration over `df`.
+    *
+    * Three projections, each reading the one below by reference:
+    *   1. one AQI column per pollutant;
+    *   2. their `greatest`;
+    *   3. the outputs from (2), with `df`'s own columns selected by
+    *      name, so the intermediates are dropped and can shadow
+    *      nothing (their prefix starts no column of `df`). An output
+    *      name `df` already has (case-insensitively, Spark's default
+    *      resolution) is replaced in place, as `withColumn` does.
+    * Spark's CollapseProject does not inline a non-trivial expression
+    * that its consumer reads more than once, so each chain stays one
+    * expression in the optimized plan. Composing the reference forms
+    * instead puts ten copies of each 6-segment chain in the plan (on
+    * `AqPipeline.transform(aqi = true)`: 439 `CASE WHEN`s and 42,810
+    * characters of plan text, against 61 and 8,599 here). Each copy is
+    * paid for three times over: Catalyst optimizes it, codegen
+    * generates it (and runs common-subexpression elimination over it),
+    * and adaptive execution re-optimizes and re-generates it after each
+    * stage. The executors paid too: the stage's generated method was
+    * 59,626 bytes, far past HotSpot's 8,000-byte huge-method limit, so
+    * it ran interpreted. Here it is 9,485 bytes, still past the limit,
+    * but lifting the limit gains nothing measurable (BENCHNOTES).
+    */
+  def score(df: DataFrame, named: Seq[(String, Column)]): DataFrame = {
+    val prefix = Iterator.iterate("__aqi_")("_" + _)
+      .find(p => !df.columns.exists(_.toLowerCase.startsWith(p))).get
+    val per = named.indices.map(i => s"$prefix$i")
+    val top = s"${prefix}max"
+    val aqis = named.zip(per).map { case ((n, c), t) => n -> col(t) }
+    val outs = Seq("aqi" -> col(top), "aqi_level" -> aqiLevel(col(top)),
+      "dominant_pollutant" -> firstEqual(aqis, col(top)))
+    def replaces(c: String)(o: (String, Column)) = o._1.equalsIgnoreCase(c)
+    val kept = df.columns.toSeq.map(c => outs.find(replaces(c)).getOrElse(c -> quoted(c)))
+    val added = outs.filterNot(o => df.columns.exists(replaces(_)(o)))
+    df.select(col("*") +: named.zip(per).map { case ((n, c), t) => pollutantAqi(n, c).as(t) }: _*)
+      .withColumn(top, overall(aqis.map(_._2)))
+      .select((kept ++ added).map { case (n, c) => c.as(n) }: _*)
+  }
+
+  private def quoted(c: String): Column = col("`" + c.replace("`", "``") + "`")
 
   /** A Scala double as a DuckDB literal that parses as DOUBLE.
     * CRITICAL: a bare decimal literal (`0.9259259259259259`) parses as

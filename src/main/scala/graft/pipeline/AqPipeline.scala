@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Aqi
@@ -184,6 +184,15 @@ object AqPipeline {
   /** §2.10 — append AQI columns (overall AQI = max over per-pollutant
     * AQIs, level, dominant pollutant) as pure expressions.
     *
+    * Scored by [[Aqi.score]], which evaluates each pollutant's chain
+    * once. The column-level forms (`rowAqi`, `aqiLevel`,
+    * `dominantPollutant`) are the reference `AqiScoreSpec` checks it
+    * against bit for bit; composed here, they put ten copies of each
+    * chain in the plan, which Catalyst optimizes, codegen generates,
+    * and adaptive execution re-optimizes and re-generates after the
+    * scan stage, in a generated method far past HotSpot's 8,000-byte
+    * JIT limit (see [[Aqi.score]] for the counts).
+    *
     * UNITS: the EPA breakpoint tables are µg/m³ for PM but ppb
     * (o3/no2/so2) / ppm (co) for gases, while OpenAQ feeds report
     * µg/m³ across the board. The REFERENCE's AQI plan feeds raw
@@ -195,22 +204,22 @@ object AqPipeline {
     * before scoring — the physically-correct mode for real µg/m³
     * gas readings.
     */
-  def withAqi(mart: DataFrame, convertGasUnits: Boolean = false): DataFrame = {
+  def withAqi(mart: DataFrame, convertGasUnits: Boolean = false): DataFrame =
+    Aqi.score(mart, concentrations(convertGasUnits))
+
+  /** Each mart pollutant, in [[AqSchemas.parameters]] order, with the
+    * concentration [[withAqi]] scores it on.
+    */
+  private[graft] def concentrations(convertGasUnits: Boolean): Seq[(String, Column)] = {
     // molar masses g/mol; co table is ppm (= ppb / 1000)
-    val gasConv: Map[String, org.apache.spark.sql.Column => org.apache.spark.sql.Column] = Map(
+    val gasConv: Map[String, Column => Column] = Map(
       "o3" -> (c => c * 24.45 / 48.00),
       "no2" -> (c => c * 24.45 / 46.0055),
       "so2" -> (c => c * 24.45 / 64.066),
       "co" -> (c => c * 24.45 / 28.01 / 1000.0))
-    val byPollutant = AqSchemas.parameters.map { p =>
-      val v = if (convertGasUnits) gasConv.get(p).map(f => f(col(p))).getOrElse(col(p))
-              else col(p)
-      p -> v
+    AqSchemas.parameters.map { p =>
+      p -> (if (convertGasUnits) gasConv.get(p).fold(col(p))(_(col(p))) else col(p))
     }
-    mart
-      .withColumn("aqi", Aqi.rowAqi(byPollutant: _*))
-      .withColumn("aqi_level", Aqi.aqiLevel(col("aqi")))
-      .withColumn("dominant_pollutant", Aqi.dominantPollutant(byPollutant: _*))
   }
 
   /** W1 + A1 + P1/P7 + J1 + P8 in one keyed aggregate: parsed

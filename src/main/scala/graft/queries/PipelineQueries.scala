@@ -889,10 +889,9 @@ object PipelineQueries extends QueryPack {
   // codegen'd Column expressions (no UDF), applied to events.value as
   // a pm2.5-like concentration; identical CASE chain in the oracle.
   q("aqi_breakpoints", Aqi.oracleSql) { (s, dir) =>
-    Tables.load(s, dir, "events")
-      .select(col("event_id"), col("value"),
-        r4(Aqi.pm25Aqi(col("value"))).as("aqi"),
-        Aqi.aqiLevel(Aqi.pm25Aqi(col("value"))).as("aqi_level"))
+    val ev = Tables.load(s, dir, "events").select(col("event_id"), col("value"))
+    Aqi.score(ev, Seq("pm25" -> col("value")))
+      .select(col("event_id"), col("value"), r4(col("aqi")).as("aqi"), col("aqi_level"))
       .orderBy("event_id")
   }
 
@@ -946,11 +945,9 @@ object PipelineQueries extends QueryPack {
       Seq(col("user_id"), col("hour")) ++
         pollutantForEventType.map { case (p, e) => r4(col(e)).as(p) }: _*)
     val byP = pollutantForEventType.map { case (p, _) => p -> col(p) }
-    val overall = Aqi.rowAqi(byP: _*)
-    wide.select(col("user_id"), col("hour"),
-      r4(overall).as("aqi"),
-      Aqi.aqiLevel(overall).as("aqi_level"),
-      Aqi.dominantPollutant(byP: _*).as("dominant"))
+    Aqi.score(wide, byP)
+      .select(col("user_id"), col("hour"), r4(col("aqi")).as("aqi"), col("aqi_level"),
+        col("dominant_pollutant").as("dominant"))
       .orderBy("user_id", "hour")
   }
 

@@ -4,6 +4,9 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
+import graft.Json
+import graft.Timer.timed
+
 import scala.collection.mutable
 
 /** Inspect one named `SparkEntry` query, one way per run — the
@@ -56,7 +59,6 @@ object Inspect {
 
     def run(): Unit =
       query(spark, sfDir).write.format("noop").mode("overwrite").save()
-    def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
     mode match {
       case "--plan" =>
@@ -65,18 +67,15 @@ object Inspect {
         query(spark, sfDir).show(20, truncate = false)
       case "--time" =>
         run() // codegen warm
-        val timed = (1 to 3).map { i =>
-          val t0 = System.nanoTime()
-          run()
-          val s = secs(t0)
+        val secs = (1 to 3).map { i =>
+          val s = timed(run())._2
           println(f"PROFILE $name run $i: $s%.3f s")
           s
         }
-        val sec = String.format(java.util.Locale.ROOT, "%.3f", Double.box(timed.min))
-        println(s"""{"query":"$name","sec":$sec,"sf":"$sfDir"}""")
+        println(Json.line(Seq("query" -> name, "sec" -> Json.seconds(secs.min), "sf" -> sfDir)))
       case _ =>
         run() // codegen warm — profile steady state, not Janino
-        val (wall, rec) = record(spark) { val t0 = System.nanoTime(); run(); secs(t0) }
+        val (wall, rec) = record(spark)(timed(run())._2)
         if (mode == "--jobs") printJobs(name, wall, rec) else printStages(name, wall, rec)
     }
     spark.stop()
