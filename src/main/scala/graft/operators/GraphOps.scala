@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
@@ -25,14 +25,23 @@ object GraphOps {
   private[operators] def bothEnds(a: String, b: String): Column =
     col(a).isNotNull && col(b).isNotNull
 
-  /** The small-graph gate of the driver paths: does `edges` have at most
-    * `bound` rows? The count is limit-bounded, so deciding never scans a
-    * huge edge set; a bound past `Int.MaxValue` (no `limit` can hold it)
-    * counts in full. A bound of 0 or less disables the driver path.
+  /** The small-graph gate of the driver paths, with their collect:
+    * `edges`' rows if there are at most `bound` of them, else `None`.
+    * One limit-bounded pass decides and collects, so deciding never
+    * scans a huge edge set. The `coalesce(1)` keeps it to one shuffle
+    * of per-partition limits and one result stage (a single job when
+    * adaptive execution knows the input fits), where a top-level
+    * limit's incremental take runs a job per scale-up round over a
+    * many-partition input. A bound past `Int.MaxValue` (no `limit` can
+    * hold it) counts in full first. A bound of 0 or less disables the
+    * driver paths and runs nothing.
     */
-  private[operators] def fitsOnDriver(edges: DataFrame, bound: Long): Boolean =
-    bound > 0 && (if (bound < Int.MaxValue) edges.limit(bound.toInt + 1) else edges)
-      .count() <= bound
+  private[operators] def collectIfSmall(edges: DataFrame, bound: Long): Option[Array[Row]] =
+    if (bound <= 0) None
+    else if (bound < Int.MaxValue)
+      Some(edges.limit(bound.toInt + 1).coalesce(1).collect()).filter(_.length <= bound)
+    else if (edges.count() <= bound) Some(edges.collect())
+    else None
 
   /** Can the driver paths key these ids as `Long`? Only integral types
     * cast losslessly: any other id would decay to null on the driver
@@ -126,8 +135,7 @@ object GraphOps {
 
   /** Driver-side PageRank over a collected edge list — the small-graph
     * body of [[pageRank]]. `None` when ineligible (non-integral node
-    * ids or edge count above the bound; the gate count is
-    * limit-bounded so deciding never scans a huge edge set).
+    * ids, or edge count above the bound: [[collectIfSmall]]).
     *
     * Weights follow the distributed path's SQL semantics: a null
     * weight adds nothing to its source's out-weight or to any rank
@@ -144,10 +152,12 @@ object GraphOps {
     // of src UNION dst (Spark's common-type widening)
     val nType = e.select(col("src").as("n"))
       .union(e.select(col("dst").as("n"))).schema("n").dataType
-    if (!integralIds(e.schema("src").dataType, e.schema("dst").dataType) ||
-        !fitsOnDriver(e, smallGraphEdges)) return None
-    val all = e.select(col("src").cast("long"), col("dst").cast("long"), col("w"))
-      .collect()
+    val collected =
+      if (!integralIds(e.schema("src").dataType, e.schema("dst").dataType)) None
+      else collectIfSmall(e.select(col("src").cast("long"), col("dst").cast("long"), col("w")),
+        smallGraphEdges)
+    if (collected.isEmpty) return None
+    val all = collected.get
       .map(r => (r.getLong(0), r.getLong(1), r.get(2)))
       .sortBy(t => (t._1, t._2)) // fixed, deterministic summation order
     val nodes = (all.map(_._1) ++ all.map(_._2)).distinct.sorted
@@ -188,8 +198,9 @@ object GraphOps {
     // INTEGER min-relaxations — the driver answer is bit-identical to
     // the distributed loop's (GraphOpsSpec pins equality), and each
     // skipped round saves a join+agg+localCheckpoint job cycle.
-    if (fitsOnDriver(e, smallGraphEdges)) {
-      val rows = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val small = collectIfSmall(e, smallGraphEdges)
+    if (small.isDefined) {
+      val rows = small.get.map(r => (r.getLong(0), r.getLong(1)))
       var dist = Map(source -> 0L)
       for (_ <- 1 to iters) {
         val relaxed = rows.flatMap { case (s, d) =>

@@ -333,18 +333,22 @@ object RelationalOps {
   }
 
   /** Driver union-find over a small (a, b) pair frame — the shared
-    * small-graph body of [[connectedComponents]] and
-    * [[connectedComponentsStar]]: every node labeled with the SMALLEST
-    * reachable id (union by min root), singletons labeled with their
-    * own id via a broadcast anti-join over `nodes` (the corpus never
-    * shuffles), labels cast back to `idType` so both paths return the
-    * identical schema. Callers gate eligibility (integral ids,
-    * limit-bounded edge count) before calling.
+    * small-graph path of [[connectedComponents]] and
+    * [[connectedComponentsStar]]. `None` unless the node ids are
+    * integral (the union-find keys ids as Long) and `p` has at most
+    * `bound` edges ([[GraphOps.collectIfSmall]]). Otherwise every node
+    * is labeled with the SMALLEST reachable id (union by min root),
+    * singletons with their own id via a broadcast anti-join over
+    * `nodes` (the corpus never shuffles), and labels are cast back to
+    * the id type so both paths return the identical schema.
     */
-  private def driverUnionFindLabels(nodes: DataFrame, idCol: String,
-                                    p: DataFrame,
-                                    idType: org.apache.spark.sql.types.DataType)
-      : DataFrame = {
+  private def driverUnionFindLabels(nodes: DataFrame, idCol: String, p: DataFrame,
+                                    bound: Long): Option[DataFrame] = {
+    val idType = nodes.schema(idCol).dataType
+    val small =
+      if (!GraphOps.integralIds(idType)) None
+      else GraphOps.collectIfSmall(p.select(col("a").cast("long"), col("b").cast("long")), bound)
+    if (small.isEmpty) return None
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -353,7 +357,7 @@ object RelationalOps {
       while (parent(c) != c) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
-    p.select(col("a").cast("long"), col("b").cast("long")).collect().foreach { row =>
+    small.get.foreach { row =>
       val a = row.getLong(0); val b = row.getLong(1)
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val (ra, rb) = (find(a), find(b))
@@ -367,9 +371,9 @@ object RelationalOps {
     val singletons = nodes.select(col(idCol).cast("long").as("id"))
       .join(broadcast(labels.select("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("label"))
-    labels.unionByName(singletons)
+    Some(labels.unionByName(singletons)
       .select(col("id").cast(idType).as(idCol),
-        col("label").cast(idType).as("cluster_id"))
+        col("label").cast(idType).as("cluster_id")))
   }
 
   /** Connected components by iterative min-label propagation — the
@@ -405,13 +409,9 @@ object RelationalOps {
     // to null here while the distributed path handles it fine), and
     // the label frame is cast BACK to the input id type so both paths
     // return the identical schema regardless of edge count.
-    val idType = nodes.schema(idCol).dataType
-    val integralId = GraphOps.integralIds(idType)
-    if (integralId && GraphOps.fitsOnDriver(p, smallGraphEdges)) {
-      val out = driverUnionFindLabels(nodes, idCol, p, idType)
-      p.unpersist()
-      return out
-    }
+    val small = driverUnionFindLabels(nodes, idCol, p, smallGraphEdges)
+    if (small.isDefined) { p.unpersist(); return small.get }
+    val integralId = GraphOps.integralIds(nodes.schema(idCol).dataType)
     val edges = p.select(col("a").as("src"), col("b").as("dst"))
       .union(p.select(col("b").as("src"), col("a").as("dst")))
       .cache()
@@ -537,17 +537,10 @@ object RelationalOps {
     // r14 measured gr_components_star spending ~2.5 s contracting an
     // 18-edge nation graph. Distributed contraction remains the plan
     // whenever the edge count clears the threshold.
-    locally {
-      val p0 = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-        .filter(GraphOps.bothEnds("a", "b")).cache()
-      val idType = nodes.schema(idCol).dataType
-      if (GraphOps.integralIds(idType) && GraphOps.fitsOnDriver(p0, smallGraphEdges)) {
-        val out = driverUnionFindLabels(nodes, idCol, p0, idType)
-        p0.unpersist()
-        return out
-      }
-      p0.unpersist()
-    }
+    val small = driverUnionFindLabels(nodes, idCol,
+      pairs.select(col(aCol).as("a"), col(bCol).as("b")).filter(GraphOps.bothEnds("a", "b")),
+      smallGraphEdges)
+    if (small.isDefined) return small.get
     def sym(e: DataFrame): DataFrame =
       e.union(e.select(col("v").as("u"), col("u").as("v")))
     // m(u) = min(N(u) ∪ {u}) over the symmetrized edge set

@@ -27,8 +27,8 @@ object PipelineQueries extends QueryPack {
   // runs), each minting fresh directories; without cleanup the host's
   // /tmp accrues hundreds of orphaned parquet trees per round. ONE
   // shutdown hook drains a shared list — a hook per dir would pile up
-  // JVM hook registrations across a full bench run (st_restart_parity
-  // alone mints 5 trees per invocation × 4 runs).
+  // JVM hook registrations across a full bench run (st_join_parity
+  // alone mints 6 trees per invocation × 4 runs).
   private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
@@ -51,59 +51,34 @@ object PipelineQueries extends QueryPack {
     dir.toString
   }
 
-  /** Stage `df` as ONE parquet file named `name` under `stageDir` with
-    * a controlled modification time — micro-batch construction for the
-    * file-source parity streams (the source orders batches by mtime).
+  /** Stages `batches` as the micro-batches of a file-source stream on
+    * `stageDir`: all of them in ONE write job, one parquet file per
+    * batch, moved in as `b<i>.parquet` with modification time i·1000 s
+    * (the source orders files by mtime). With `restartAfter = Some(k)`
+    * only the first k are moved in; the returned action moves in the
+    * rest. An empty batch fails loudly: it would be no micro-batch.
     */
-  private def stageFile(df: DataFrame, stageDir: String, name: String,
-                        mtime: Long): Unit = {
+  private def stageBatches(batches: Seq[DataFrame], stageDir: String,
+                           restartAfter: Option[Int] = None): () => Unit = {
     val tmp = tmpDir("graft_stage_part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val dst = java.nio.file.Paths.get(stageDir, name)
-    java.nio.file.Files.copy(part.toPath, dst,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    dst.toFile.setLastModified(mtime)
-    ()
-  }
-
-  /** Stage SEVERAL batch files from ONE pass over `df` — the
-    * multi-file [[stageFile]]: rows are labeled by the first matching
-    * predicate (they must be disjoint and exhaustive — a row matching
-    * none fails the count check below), written once via
-    * `partitionBy`, and the per-batch part files moved into place
-    * with the controlled mtimes. The pre-r13 shape ran one full
-    * source scan + write job PER batch file; a 2-batch × 2-side
-    * stream-stream staging paid 4 scans where this pays 2 (guide
-    * §1.2: don't compute things twice).
-    */
-  private def stageSplit(df: DataFrame, stageDir: String,
-                         parts: Seq[(org.apache.spark.sql.Column, String, Long)]): Unit = {
-    val tmp = tmpDir("graft_stage_part")
-    val label = parts.zipWithIndex.tail.foldLeft(
-      when(parts.head._1, lit(0))) { case (w, ((pred, _, _), i)) =>
-      w.when(pred, lit(i))
-    }
-    df.withColumn("__b", label)
+    batches.zipWithIndex.map { case (b, i) => b.withColumn("__b", lit(i)) }
+      .reduce(_ unionByName _)
       .coalesce(1).write.partitionBy("__b").mode("overwrite").parquet(tmp)
-    // a row matching NO predicate writes the hive default partition —
-    // silently losing it from every batch; fail loudly instead
-    require(!new java.io.File(tmp, "__b=__HIVE_DEFAULT_PARTITION__").exists(),
-      "stageSplit: rows matched no predicate — batches must be exhaustive")
-    parts.zipWithIndex.foreach { case ((_, name, mtime), i) =>
-      val dir = new java.io.File(tmp, s"__b=$i")
-      val files = Option(dir.listFiles())
+    val files = batches.indices.map { i =>
+      val parts = Option(new java.io.File(tmp, s"__b=$i").listFiles())
         .map(_.filter(_.getName.endsWith(".parquet"))).getOrElse(Array.empty)
-      require(files.length == 1,
-        s"stageSplit: batch $i ('$name') produced ${files.length} part files " +
-          "— empty batch or non-exhaustive predicates; stage it with " +
-          "stageFile instead")
-      val dst = java.nio.file.Paths.get(stageDir, name)
-      java.nio.file.Files.copy(files.head.toPath, dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dst.toFile.setLastModified(mtime)
+      require(parts.length == 1,
+        s"staging: batch ${i + 1} of $stageDir wrote ${parts.length} part files, not 1")
+      parts.head
     }
+    def moveIn(batch: Range): Unit = batch.foreach { i =>
+      val dst = java.nio.file.Paths.get(stageDir, s"b${i + 1}.parquet")
+      Files.move(files(i).toPath, dst)
+      dst.toFile.setLastModified((i + 1) * 1000000L)
+    }
+    val visible = restartAfter.getOrElse(batches.size)
+    moveIn(0 until visible)
+    () => moveIn(visible until batches.size)
   }
 
   /** Run a streaming query to completion and FAIL LOUDLY on timeout —
@@ -159,6 +134,12 @@ object PipelineQueries extends QueryPack {
     */
   private val noDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled" -> "true"
 
+  /** The production state-store provider, for the rows that pin its
+    * recovery path.
+    */
+  private val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Drain the stream `build` makes on an isolated clone of `s`
     * ([[streamConfs]] plus `extraConf`) into parquet at `out`: one
     * append-mode AvailableNow run on checkpoint `ckpt`, failing loudly
@@ -182,6 +163,78 @@ object PipelineQueries extends QueryPack {
     */
   private def staged(c: SparkSession, schema: StructType, dir: String): DataFrame =
     c.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
+
+  /** The harness of every streaming-parity row with a parquet sink.
+    *
+    *  - `sides`: per input stream, its micro-batches in order. Each
+    *    side is staged in its own directory ([[stageBatches]], one
+    *    write job per side), and `build` gets the staged streams in
+    *    the same order, each reading one file per micro-batch.
+    *  - `restartAfter = Some(k)`: a query drains the first k batches
+    *    of every side and stops; the later batches are then moved in
+    *    and a NEW query drains them on the same checkpoint, so state
+    *    and offsets must round-trip the checkpoint. `None`: one query
+    *    drains every batch.
+    *  - Every drain is [[drainToParquet]]: an isolated clone of `s`
+    *    under [[streamConfs]] plus `extraConf` (e.g. [[noDataBatches]]
+    *    where the finalizing no-data batch must run, or [[rocksDb]]).
+    *
+    * Mints its own stage, output and checkpoint directories; returns
+    * the output directory and the last query (for its progress).
+    */
+  private def streamParity(s: SparkSession, label: String, sides: Seq[Seq[DataFrame]],
+                           restartAfter: Option[Int] = None,
+                           extraConf: Seq[(String, String)] = Nil)(
+                           build: Seq[DataFrame] => Dataset[_]): (String, StreamingQuery) = {
+    val stages = sides.map(_ => tmpDir(s"graft_${label}_in"))
+    val out = tmpDir(s"graft_${label}_out")
+    val ckpt = tmpDir(s"graft_${label}_ckpt")
+    val later = sides.zip(stages).map { case (batches, dir) =>
+      stageBatches(batches, dir, restartAfter) }
+    def drain(run: String): StreamingQuery =
+      drainToParquet(s, s"$label stream$run", out, ckpt, extraConf: _*) { c =>
+        build(sides.zip(stages).map { case (batches, dir) =>
+          staged(c, batches.head.schema, dir) })
+      }
+    val query = restartAfter.fold(drain("")) { _ =>
+      drain(" run 1")
+      later.foreach(_())
+      drain(" run 2")
+    }
+    (out, query)
+  }
+
+  /** `ev`'s `ts` range cut into `n` equal parts, to the millisecond:
+    * lo, the n − 1 cut points, hi.
+    */
+  private def timeCuts(ev: DataFrame, n: Int): Seq[java.sql.Timestamp] = {
+    val r = ev.agg(min("ts"), max("ts")).head()
+    val (lo, hi) = (r.getTimestamp(0).getTime, r.getTimestamp(1).getTime)
+    (0 to n).map(k => new java.sql.Timestamp(lo + (hi - lo) * k / n))
+  }
+
+  /** Sentinel rows shaped like `like` (its columns, types and order):
+    * one per row of `keys` (default: one row), keeping `keys`' columns
+    * and setting each other column to its value in `set`. A row past
+    * every real event time closes every window or session before it.
+    */
+  private def sentinels(like: DataFrame, set: (String, Any)*)(
+      keys: DataFrame = like.sparkSession.range(1).select()): DataFrame = {
+    val given = set.toMap
+    keys.select(like.schema.map { f =>
+      if (keys.columns.contains(f.name)) col(f.name)
+      else lit(given(f.name)).cast(f.dataType).as(f.name)
+    }: _*)
+  }
+
+  /** `df` cut by `ts` into one micro-batch per interval between
+    * consecutive `cuts`: ts ≤ the first cut, …, ts > the last.
+    */
+  private def slices(df: DataFrame, cuts: Seq[java.sql.Timestamp]): Seq[DataFrame] =
+    (0 to cuts.size).map { i =>
+      df.filter((if (i > 0) col("ts") > cuts(i - 1) else lit(true)) &&
+        (if (i < cuts.size) col("ts") <= cuts(i) else lit(true)))
+    }
 
   /** The flagship composite — the whole reference transform chain
     * (process_openaq_raw.py:94-256 re-expressed): W1 dedup → derive
@@ -2119,7 +2172,7 @@ object PipelineQueries extends QueryPack {
   // session set. Watermark delay spans the whole table so nothing is
   // late-dropped (parity isolates the GAP/state semantics; late-drop
   // semantics are pinned separately in the streaming specs).
-  q("st_sessionize_parity",
+  private val sessionizeOracle =
     s"""WITH e AS (
       |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
       |g AS (
@@ -2136,27 +2189,30 @@ object PipelineQueries extends QueryPack {
       |  CAST(count(*) AS BIGINT) AS n_events,
       |  ${sqlR4("sum(value)")} AS total_value
       |FROM s GROUP BY user_id, seq
-      |ORDER BY user_id, session_start""".stripMargin) { (s, dir) =>
+      |ORDER BY user_id, session_start""".stripMargin
+
+  q("st_sessionize_parity", sessionizeOracle) { (s, dir) =>
+    sessionizeParity(s, dir, "st_sessionize_parity")(
+      graft.streaming.Sessionize.sessionizeStream(_, gapMinutes = 30,
+        watermarkDelay = "3650 days"))
+  }
+
+  /** The sessionization rows' body: events in two micro-batches cut at
+    * the midpoint of their time range, the per-user sentinels in the
+    * second, drained through `sessionize`.
+    */
+  private def sessionizeParity(s: SparkSession, dir: String, label: String,
+                               restartAfter: Option[Int] = None,
+                               extraConf: Seq[(String, String)] = Nil)(
+                               sessionize: DataFrame => Dataset[_]): DataFrame = {
     val ev = Tables.load(s, dir, "events").select(col("user_id"), col("ts"), col("value"))
-    val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
-    val (lo, hi) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
-    val cutoff = new java.sql.Timestamp((lo.getTime + hi.getTime) / 2)
-    val sentinelTs = new java.sql.Timestamp(hi.getTime + 24L * 3600 * 1000)
-    val sentinels = ev.select("user_id").distinct()
-      .withColumn("ts", lit(sentinelTs)).withColumn("value", lit(0.0))
-    val stage = tmpDir("graft_st_sess_in")
-    // one staging pass: the sentinels' far-future ts lands them in b2
-    // via the same predicate the old per-batch scans applied
-    stageSplit(ev.unionByName(sentinels), stage, Seq(
-      (col("ts") <= cutoff, "b1.parquet", 1000000L),
-      (col("ts") > cutoff, "b2.parquet", 2000000L)))
-    val outDir = tmpDir("graft_st_sess_out")
-    drainToParquet(s, "st_sessionize_parity stream", outDir,
-        tmpDir("graft_st_sess_ckpt")) { c =>
-      graft.streaming.Sessionize.sessionizeStream(staged(c, ev.schema, stage),
-        gapMinutes = 30, watermarkDelay = "3650 days")
-    }
-    s.read.parquet(outDir)
+    val Seq(_, cutoff, hi) = timeCuts(ev, 2)
+    val users = sentinels(ev, "ts" -> new java.sql.Timestamp(hi.getTime + 24L * 3600 * 1000),
+      "value" -> 0.0)(ev.select("user_id").distinct())
+    val Seq(b1, b2) = slices(ev, Seq(cutoff))
+    val (out, _) = streamParity(s, label, Seq(Seq(b1, b2.unionByName(users))),
+      restartAfter, extraConf)(in => sessionize(in.head))
+    s.read.parquet(out)
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), r4(col("total_value")).as("total_value"))
       .orderBy("user_id", "session_start")
@@ -2177,15 +2233,9 @@ object PipelineQueries extends QueryPack {
       |FROM events GROUP BY 1, 2
       |ORDER BY hour, event_type""".stripMargin) { (s, dir) =>
     val ev = Tables.load(s, dir, "events").select(col("ts"), col("event_type"))
-    val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
-    val (lo, hi) = (bounds.getTimestamp(0).getTime, bounds.getTimestamp(1).getTime)
-    val stage = tmpDir("graft_st_hourly_in")
-    val c1 = new java.sql.Timestamp(lo + (hi - lo) / 3)
-    val c2 = new java.sql.Timestamp(lo + 2 * (hi - lo) / 3)
-    stageSplit(ev, stage, Seq(
-      (col("ts") <= c1, "b1.parquet", 1000000L),
-      (col("ts") > c1 && col("ts") <= c2, "b2.parquet", 2000000L),
-      (col("ts") > c2, "b3.parquet", 3000000L)))
+    val Seq(_, c1, c2, _) = timeCuts(ev, 3)
+    val stage = tmpDir("graft_st_hourly_parity_in")
+    stageBatches(slices(ev, Seq(c1, c2)), stage)
     val sinkName = s"st_hourly_parity_${System.nanoTime()}"
     // the memory sink registers its view in the clone the stream ran
     // on, so the returned frame reads it there
@@ -2224,13 +2274,9 @@ object PipelineQueries extends QueryPack {
     val evd = docs.withColumn("ts",
       timestamp_seconds(lit(1704067200L) + col("doc_id")))
     val maxId = docs.agg(max("doc_id")).collect()(0).getLong(0)
-    val stage = tmpDir("graft_st_nd_in")
-    stageSplit(evd, stage, Seq(
-      (col("doc_id") <= maxId / 2, "b1.parquet", 1000000L),
-      (col("doc_id") > maxId / 2, "b2.parquet", 2000000L)))
-    val outDir = tmpDir("graft_st_nd_out")
-    drainToParquet(s, "st_neardup_parity stream", outDir, tmpDir("graft_st_nd_ckpt")) { c =>
-      graft.streaming.NearDupStream.nearDupPairs(staged(c, evd.schema, stage),
+    val (outDir, _) = streamParity(s, "st_neardup_parity", Seq(Seq(
+        evd.filter(col("doc_id") <= maxId / 2), evd.filter(col("doc_id") > maxId / 2)))) { in =>
+      graft.streaming.NearDupStream.nearDupPairs(in.head,
         "doc_id", "text", "ts", delay = "3650 days", maxHamming = 3)
     }
     // explicit schema: a zero-pair run leaves no parquet files to infer from
@@ -2572,17 +2618,11 @@ object PipelineQueries extends QueryPack {
     val ev = Tables.load(s, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
     val even = ev.filter(col("event_id") % 2 === 0)
-    val maxEven = even.agg(max("ts")).collect()(0).getTimestamp(0)
+    val maxEven = timeCuts(even, 1).last
     val reinjectFrom = new java.sql.Timestamp(maxEven.getTime - 3L * 86400 * 1000)
-    val stage = tmpDir("graft_st_late_in")
-    stageFile(even, stage, "b1.parquet", 1000000L)
-    stageFile(even.filter(col("ts") >= reinjectFrom), stage, "b2.parquet", 2000000L)
-    stageFile(ev.filter(col("event_id") % 2 === 1), stage, "b3.parquet", 3000000L)
-    val outDir = tmpDir("graft_st_late_out")
-    drainToParquet(s, "st_late_drop_parity stream", outDir, tmpDir("graft_st_late_ckpt")) { c =>
-      staged(c, ev.schema, stage)
-        .withWatermark("ts", "7 days")
-        .dropDuplicates("event_id", "ts")
+    val (outDir, _) = streamParity(s, "st_late_drop_parity", Seq(Seq(even,
+        even.filter(col("ts") >= reinjectFrom), ev.filter(col("event_id") % 2 === 1)))) { in =>
+      in.head.withWatermark("ts", "7 days").dropDuplicates("event_id", "ts")
     }
     s.read.schema(ev.schema).parquet(outDir).orderBy("event_id")
   }
@@ -2624,25 +2664,15 @@ object PipelineQueries extends QueryPack {
       col("event_type").as("parameter"),
       col("value"),
       date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("extracted_at"))
-    def dummy(tsStr: String, id: Long) = s.range(1).select(
-      lit(-1L).as("location_id"), lit(id).as("sensor_id"),
-      lit(tsStr).as("datetime"), lit("none").as("parameter"),
-      lit(0.0).as("value"), lit("").as("extracted_at"))
-    val stage = tmpDir("graft_st_fresh_in")
-    // one staging pass; the two dummies route by their planted
-    // sensor_ids (−1 → b2 with the odd sensors, −2 → b3 alone —
-    // note −1 % 2 is −1 in Spark, so the odd-test uses |s % 2| = 1)
-    stageSplit(meas.unionByName(dummy("2100-01-01 00:00:00", -1L))
-        .unionByName(dummy("2100-01-02 00:00:00", -2L)), stage, Seq(
-      (col("sensor_id") % 2 === 0 && col("sensor_id") =!= -2L,
-        "b1.parquet", 1000000L),
-      (abs(col("sensor_id") % 2) === 1, "b2.parquet", 2000000L),
-      (col("sensor_id") === -2L, "b3.parquet", 3000000L)))
-    val outDir = tmpDir("graft_st_fresh_out")
-    drainToParquet(s, "st_dedup_freshest_parity stream", outDir,
-        tmpDir("graft_st_fresh_ckpt")) { c =>
-      graft.streaming.AqStreaming.dedupFreshestStream(staged(c, meas.schema, stage),
-        watermark = "3650 days")
+    def dummy(datetime: String, id: Long) = sentinels(meas, "location_id" -> -1L,
+      "sensor_id" -> id, "datetime" -> datetime, "parameter" -> "none",
+      "value" -> 0.0, "extracted_at" -> "")()
+    val (outDir, _) = streamParity(s, "st_dedup_freshest_parity", Seq(Seq(
+        meas.filter(col("sensor_id") % 2 === 0),
+        meas.filter(col("sensor_id") % 2 =!= 0)
+          .unionByName(dummy("2100-01-01 00:00:00", -1L)),
+        dummy("2100-01-02 00:00:00", -2L)))) { in =>
+      graft.streaming.AqStreaming.dedupFreshestStream(in.head, watermark = "3650 days")
     }
     s.read.parquet(outDir)
       .select("location_id", "datetime", "parameter", "value",
@@ -2661,57 +2691,11 @@ object PipelineQueries extends QueryPack {
   // Non-vacuous by construction: every user's last batch-1 session
   // stays OPEN in state at shutdown (no sentinel in b1) and is only
   // emitted/merged correctly in run 2 if recovery restored it — lost
-  // state would drop or split those sessions and fail the hash. The
-  // oracle is the one-shot batch sessionization, identical to
-  // st_sessionize_parity's.
-  q("st_restart_parity",
-    s"""WITH e AS (
-      |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-      |g AS (
-      |  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-      |      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-      |    THEN 1 ELSE 0 END AS new_s
-      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-      |s AS (
-      |  SELECT *, sum(new_s) OVER (
-      |    PARTITION BY user_id ORDER BY ts
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seq
-      |  FROM g)
-      |SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-      |  CAST(count(*) AS BIGINT) AS n_events,
-      |  ${sqlR4("sum(value)")} AS total_value
-      |FROM s GROUP BY user_id, seq
-      |ORDER BY user_id, session_start""".stripMargin) { (s, dir) =>
-    val ev = Tables.load(s, dir, "events").select(col("user_id"), col("ts"), col("value"))
-    val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
-    val (lo, hi) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
-    val cutoff = new java.sql.Timestamp((lo.getTime + hi.getTime) / 2)
-    val sentinelTs = new java.sql.Timestamp(hi.getTime + 24L * 3600 * 1000)
-    val sentinels = ev.select("user_id").distinct()
-      .withColumn("ts", lit(sentinelTs)).withColumn("value", lit(0.0))
-    val stage = tmpDir("graft_st_restart_in")
-    val outDir = tmpDir("graft_st_restart_out")
-    val ckpt = tmpDir("graft_st_restart_ckpt")
-    def runOnce(label: String): Unit =
-      drainToParquet(s, label, outDir, ckpt) { c =>
-        graft.streaming.Sessionize.sessionizeStream(staged(c, ev.schema, stage),
-          gapMinutes = 30, watermarkDelay = "3650 days")
-      }
-    // run 1: only batch 1 exists; AvailableNow drains it and the
-    // query TERMINATES — open sessions now live only in the
-    // checkpoint's state store files.
-    stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
-    runOnce("st_restart_parity stream run 1")
-    // run 2: a NEW query (fresh StreamingQuery id incarnation, same
-    // checkpoint) must resume past b1 via the offset log and restore
-    // per-user state from disk before folding in batch 2.
-    stageFile(ev.filter(col("ts") > cutoff).unionByName(sentinels),
-      stage, "b2.parquet", 2000000L)
-    runOnce("st_restart_parity stream run 2")
-    s.read.parquet(outDir)
-      .select(col("user_id"), col("session_start"), col("session_end"),
-        col("n_events"), r4(col("total_value")).as("total_value"))
-      .orderBy("user_id", "session_start")
+  // state would drop or split those sessions and fail the hash.
+  q("st_restart_parity", sessionizeOracle) { (s, dir) =>
+    sessionizeParity(s, dir, "st_restart_parity", restartAfter = Some(1))(
+      graft.streaming.Sessionize.sessionizeStream(_, gapMinutes = 30,
+        watermarkDelay = "3650 days"))
   }
 
   // §2.9 streaming↔batch parity #7 — STREAM-STREAM JOIN with
@@ -2737,7 +2721,7 @@ object PipelineQueries extends QueryPack {
   // match can span the eviction boundary, so state bounded by the
   // window loses nothing (the 100 TB story: join state ∝ window, not
   // stream length, with zero missed pairs).
-  q("st_join_parity",
+  private val attributionOracle =
     """WITH e AS (
       |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value, event_type
       |  FROM events),
@@ -2747,36 +2731,38 @@ object PipelineQueries extends QueryPack {
       |  c.value AS c_value, p.value AS e_value
       |FROM c LEFT JOIN p ON c.user_id = p.user_id
       |  AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE
-      |ORDER BY 1, 2, 3, 5""".stripMargin) { (s, dir) =>
-    val ev = Tables.load(s, dir, "events")
-      .select(col("user_id"), col("ts"), col("value"), col("event_type"))
-    val causes = ev.filter(col("event_type") === "click").drop("event_type")
-    val effects = ev.filter(col("event_type") === "purchase").drop("event_type")
-    val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
-    val cutoff = new java.sql.Timestamp(
-      (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2)
-    def heartbeat = s.range(1).select(lit(-1L).as("user_id"),
-      lit(java.sql.Timestamp.valueOf("2100-01-01 00:00:00")).as("ts"),
-      lit(0.0).as("value"))
-    val cStage = tmpDir("graft_st_join_c")
-    val eStage = tmpDir("graft_st_join_e")
-    // one staging pass per side (the heartbeats' 2100 ts lands them
-    // in b2 via the same predicate the old per-batch scans applied)
-    val cuts = Seq(
-      (col("ts") <= cutoff, "b1.parquet", 1000000L),
-      (col("ts") > cutoff, "b2.parquet", 2000000L))
-    stageSplit(causes.unionByName(heartbeat), cStage, cuts)
-    stageSplit(effects.unionByName(heartbeat), eStage, cuts)
-    val outDir = tmpDir("graft_st_join_out")
-    drainToParquet(s, "st_join_parity stream", outDir, tmpDir("graft_st_join_ckpt")) { c =>
-      graft.streaming.StreamJoins.attributionJoinLeftOuter(
-        staged(c, causes.schema, cStage), staged(c, causes.schema, eStage),
+      |ORDER BY 1, 2, 3, 5""".stripMargin
+
+  q("st_join_parity", attributionOracle) { (s, dir) =>
+    attributionParity(s, "st_join_parity", Tables.load(s, dir, "events"))._1
+  }
+
+  /** The attribution-join rows' body: `ev`'s clicks and purchases as two
+    * streams, each in two micro-batches cut at the midpoint of `ev`'s
+    * time range with a far-future heartbeat (user −1) in the second,
+    * left-outer joined; returns the joined rows without the heartbeats'
+    * self-pair, and the last query.
+    */
+  private def attributionParity(s: SparkSession, label: String, ev: DataFrame,
+                                restartAfter: Option[Int] = None): (DataFrame, StreamingQuery) = {
+    val Seq(_, cutoff, _) = timeCuts(ev, 2)
+    def side(eventType: String): Seq[DataFrame] = {
+      val events = ev.filter(col("event_type") === eventType)
+        .select(col("user_id"), col("ts"), col("value"))
+      val heartbeat = sentinels(events, "user_id" -> -1L,
+        "ts" -> java.sql.Timestamp.valueOf("2100-01-01 00:00:00"), "value" -> 0.0)()
+      val Seq(b1, b2) = slices(events, Seq(cutoff))
+      Seq(b1, b2.unionByName(heartbeat))
+    }
+    val (outDir, query) = streamParity(s, label, Seq(side("click"), side("purchase")),
+        restartAfter) { in =>
+      graft.streaming.StreamJoins.attributionJoinLeftOuter(in(0), in(1),
         windowMinutes = 30, watermarkDelay = "10 minutes")
     }
-    s.read.parquet(outDir)
-      .filter(col("user_id") >= 0) // drop the two heartbeats' self-pair
+    (s.read.parquet(outDir)
+      .filter(col("user_id") >= 0)
       .select("user_id", "c_ts", "e_ts", "c_value", "e_value")
-      .orderBy("user_id", "c_ts", "e_ts", "e_value")
+      .orderBy("user_id", "c_ts", "e_ts", "e_value"), query)
   }
 
   // §2.9 streaming↔batch parity — the stream-stream join under KEY
@@ -2815,45 +2801,21 @@ object PipelineQueries extends QueryPack {
         when(pmod(col("user_id"), lit(5)) === 0, lit(1L))
           .otherwise(col("user_id")).as("user_id"),
         col("ts"), col("value"), col("event_type"))
-    val causes = ev.filter(col("event_type") === "click").drop("event_type")
-    val effects = ev.filter(col("event_type") === "purchase").drop("event_type")
     // non-vacuity: the planted key must actually be hot
-    val hotStats = causes.agg(count(lit(1)).as("n"),
-      sum(when(col("user_id") === 1, 1L).otherwise(0L)).as("hot")).collect()(0)
+    val hotStats = ev.filter(col("event_type") === "click")
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("user_id") === 1, 1L).otherwise(0L)).as("hot")).collect()(0)
     val hotPlantedOk = hotStats.getLong(1) * 100 >= hotStats.getLong(0) * 15
-    val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
-    val cutoff = new java.sql.Timestamp(
-      (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2)
-    def heartbeat = s.range(1).select(lit(-1L).as("user_id"),
-      lit(java.sql.Timestamp.valueOf("2100-01-01 00:00:00")).as("ts"),
-      lit(0.0).as("value"))
-    val cStage = tmpDir("graft_st_jsk_c")
-    val eStage = tmpDir("graft_st_jsk_e")
-    // one staging pass per side — see st_join_parity
-    val cuts = Seq(
-      (col("ts") <= cutoff, "b1.parquet", 1000000L),
-      (col("ts") > cutoff, "b2.parquet", 2000000L))
-    stageSplit(causes.unionByName(heartbeat), cStage, cuts)
-    stageSplit(effects.unionByName(heartbeat), eStage, cuts)
-    val outDir = tmpDir("graft_st_jsk_out")
-    val query = drainToParquet(s, "st_join_skew_parity stream", outDir,
-        tmpDir("graft_st_jsk_ckpt")) { c =>
-      graft.streaming.StreamJoins.attributionJoinLeftOuter(
-        staged(c, causes.schema, cStage), staged(c, causes.schema, eStage),
-        windowMinutes = 30, watermarkDelay = "10 minutes")
-    }
+    val (joined, query) = attributionParity(s, "st_join_skew_parity", ev)
     val stateRows = Option(query.lastProgress)
       .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
     // after the 2100 heartbeats advance the watermark, every real
     // window is closed: residual join state is the heartbeats alone
     // (≤ a few rows) — NOT proportional to the hot key's row count
     val stateDrainedOk = stateRows >= 0 && stateRows <= 8
-    s.read.parquet(outDir)
-      .filter(col("user_id") >= 0) // drop the heartbeats' self-pair
-      .select("user_id", "c_ts", "e_ts", "c_value", "e_value")
+    joined
       .withColumn("hot_planted_ok", lit(hotPlantedOk))
       .withColumn("state_drained_ok", lit(stateDrainedOk))
-      .orderBy("user_id", "c_ts", "e_ts", "e_value")
   }
 
   // §2.9 streaming↔batch parity #10 — CHECKPOINT-RESTART for the
@@ -2869,53 +2831,9 @@ object PipelineQueries extends QueryPack {
   // incarnation, and a batch-1 unmatched cause can only emit its
   // outer row if recovery carried it to the post-heartbeat watermark
   // close. Lost or double-restored state fails the hash either way.
-  q("st_join_restart_parity",
-    """WITH e AS (
-      |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value, event_type
-      |  FROM events),
-      |c AS (SELECT user_id, ts, value FROM e WHERE event_type = 'click'),
-      |p AS (SELECT user_id, ts, value FROM e WHERE event_type = 'purchase')
-      |SELECT c.user_id, c.ts AS c_ts, p.ts AS e_ts,
-      |  c.value AS c_value, p.value AS e_value
-      |FROM c LEFT JOIN p ON c.user_id = p.user_id
-      |  AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE
-      |ORDER BY 1, 2, 3, 5""".stripMargin) { (s, dir) =>
-    val ev = Tables.load(s, dir, "events")
-      .select(col("user_id"), col("ts"), col("value"), col("event_type"))
-    val causes = ev.filter(col("event_type") === "click").drop("event_type")
-    val effects = ev.filter(col("event_type") === "purchase").drop("event_type")
-    val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
-    val cutoff = new java.sql.Timestamp(
-      (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2)
-    def heartbeat = s.range(1).select(lit(-1L).as("user_id"),
-      lit(java.sql.Timestamp.valueOf("2100-01-01 00:00:00")).as("ts"),
-      lit(0.0).as("value"))
-    val cStage = tmpDir("graft_st_jr_c")
-    val eStage = tmpDir("graft_st_jr_e")
-    val outDir = tmpDir("graft_st_jr_out")
-    val ckpt = tmpDir("graft_st_jr_ckpt")
-    def runOnce(label: String): Unit =
-      drainToParquet(s, label, outDir, ckpt) { c =>
-        graft.streaming.StreamJoins.attributionJoinLeftOuter(
-          staged(c, causes.schema, cStage), staged(c, causes.schema, eStage),
-          windowMinutes = 30, watermarkDelay = "10 minutes")
-      }
-    // run 1: batch 1 only (both sides ≤ cutoff); on termination every
-    // still-joinable row sits solely in the symmetric join state
-    stageFile(causes.filter(col("ts") <= cutoff), cStage, "b1.parquet", 1000000L)
-    stageFile(effects.filter(col("ts") <= cutoff), eStage, "b1.parquet", 1000000L)
-    runOnce("st_join_restart_parity stream run 1")
-    // run 2: a NEW query on the same checkpoint folds in batch 2 +
-    // the far-future heartbeats that close every remaining window
-    stageFile(causes.filter(col("ts") > cutoff).unionByName(heartbeat),
-      cStage, "b2.parquet", 2000000L)
-    stageFile(effects.filter(col("ts") > cutoff).unionByName(heartbeat),
-      eStage, "b2.parquet", 2000000L)
-    runOnce("st_join_restart_parity stream run 2")
-    s.read.parquet(outDir)
-      .filter(col("user_id") >= 0) // drop the two heartbeats' self-pair
-      .select("user_id", "c_ts", "e_ts", "c_value", "e_value")
-      .orderBy("user_id", "c_ts", "e_ts", "e_value")
+  q("st_join_restart_parity", attributionOracle) { (s, dir) =>
+    attributionParity(s, "st_join_restart_parity", Tables.load(s, dir, "events"),
+      restartAfter = Some(1))._1
   }
 
   // §2.9 streaming↔batch parity #8 — CHECKPOINT-RESTART for the
@@ -2943,7 +2861,7 @@ object PipelineQueries extends QueryPack {
       |ORDER BY hour, event_type""".stripMargin
 
   q("st_restart_agg_parity", restartAggOracle) { (s, dir) =>
-    restartAggParity(s, dir, "st_restart_agg_parity", "ragg")
+    restartAggParity(s, dir, "st_restart_agg_parity")
   }
 
   // Same restart harness on the PRODUCTION state backend: recovery
@@ -2959,37 +2877,24 @@ object PipelineQueries extends QueryPack {
   // (Verify), and a borrowed conf would be visible to every row
   // running alongside this one.
   q("st_restart_agg_rocksdb_parity", restartAggOracle) { (s, dir) =>
-    restartAggParity(s, dir, "st_restart_agg_rocksdb_parity", "raggrdb", rocksDb)
+    restartAggParity(s, dir, "st_restart_agg_rocksdb_parity", rocksDb)
   }
 
-  private val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   private def restartAggParity(s: SparkSession, dir: String, label: String,
-                               tag: String, extraConf: (String, String)*): DataFrame = {
+                               extraConf: (String, String)*): DataFrame = {
     val ev = Tables.load(s, dir, "events").select(col("ts"), col("event_type"))
-    val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
-    val (lo, hi) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
-    val cutoff = new java.sql.Timestamp((lo.getTime + hi.getTime) / 2)
-    val heartbeat = s.range(1).select(
-      lit(new java.sql.Timestamp(hi.getTime + 2L * 86400 * 1000)).as("ts"),
-      lit("hb").as("event_type"))
-    val stage = tmpDir(s"graft_st_${tag}_in")
-    val outDir = tmpDir(s"graft_st_${tag}_out")
-    val ckpt = tmpDir(s"graft_st_${tag}_ckpt")
-    def runOnce(label: String): Unit =
-      drainToParquet(s, label, outDir, ckpt, extraConf: _*) { c =>
-        staged(c, ev.schema, stage)
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(col("window.start").as("hour"), col("event_type"), col("n"))
-      }
-    stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
-    runOnce(s"$label stream run 1")
-    stageFile(ev.filter(col("ts") > cutoff).unionByName(heartbeat),
-      stage, "b2.parquet", 2000000L)
-    runOnce(s"$label stream run 2")
+    val Seq(_, cutoff, hi) = timeCuts(ev, 2)
+    val heartbeat = sentinels(ev,
+      "ts" -> new java.sql.Timestamp(hi.getTime + 2L * 86400 * 1000), "event_type" -> "hb")()
+    val Seq(b1, b2) = slices(ev, Seq(cutoff))
+    val (outDir, _) = streamParity(s, label, Seq(Seq(b1, b2.unionByName(heartbeat))),
+        Some(1), extraConf) { in =>
+      in.head
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").as("hour"), col("event_type"), col("n"))
+    }
     s.read.parquet(outDir)
       .filter(col("event_type") =!= "hb") // belt-and-braces: never emits
       .select("hour", "event_type", "n")
@@ -3000,56 +2905,17 @@ object PipelineQueries extends QueryPack {
   // transformWithState / RocksDB state backend (the third and last
   // stateful backend: st_restart_parity covers flatMapGroupsWithState
   // on the default HDFS-backed provider, st_restart_agg_parity the
-  // windowed-aggregate store). Identical harness to st_restart_parity
-  // — stop after batch 1 with every user's last session OPEN in state,
-  // resume a brand-new query from the same checkpoint — but through
+  // windowed-aggregate store). st_restart_parity's restart — stop
+  // after batch 1 with every user's last session OPEN in state, resume
+  // a brand-new query from the same checkpoint — but through
   // [[graft.streaming.SessionizeV2]], so recovery must replay RocksDB
   // snapshot/changelog files AND restore the per-key event-time timer
   // registry (timers never fire here — the 3650-day delay pins gap
-  // semantics; per-user sentinels close final sessions inline). The
-  // oracle is the same one-shot batch sessionization.
-  q("st_restart_v2_parity",
-    s"""WITH e AS (
-      |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-      |g AS (
-      |  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-      |      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-      |    THEN 1 ELSE 0 END AS new_s
-      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-      |s AS (
-      |  SELECT *, sum(new_s) OVER (
-      |    PARTITION BY user_id ORDER BY ts
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seq
-      |  FROM g)
-      |SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-      |  CAST(count(*) AS BIGINT) AS n_events,
-      |  ${sqlR4("sum(value)")} AS total_value
-      |FROM s GROUP BY user_id, seq
-      |ORDER BY user_id, session_start""".stripMargin) { (s, dir) =>
-    val ev = Tables.load(s, dir, "events").select(col("user_id"), col("ts"), col("value"))
-    val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
-    val (lo, hi) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
-    val cutoff = new java.sql.Timestamp((lo.getTime + hi.getTime) / 2)
-    val sentinelTs = new java.sql.Timestamp(hi.getTime + 24L * 3600 * 1000)
-    val sentinels = ev.select("user_id").distinct()
-      .withColumn("ts", lit(sentinelTs)).withColumn("value", lit(0.0))
-    val stage = tmpDir("graft_st_rv2_in")
-    val outDir = tmpDir("graft_st_rv2_out")
-    val ckpt = tmpDir("graft_st_rv2_ckpt")
-    def runOnce(label: String): Unit =
-      drainToParquet(s, label, outDir, ckpt, rocksDb) { c =>
-        graft.streaming.SessionizeV2.sessionizeStream(staged(c, ev.schema, stage),
-          gapMinutes = 30, watermarkDelay = "3650 days")
-      }
-    stageFile(ev.filter(col("ts") <= cutoff), stage, "b1.parquet", 1000000L)
-    runOnce("st_restart_v2_parity stream run 1")
-    stageFile(ev.filter(col("ts") > cutoff).unionByName(sentinels),
-      stage, "b2.parquet", 2000000L)
-    runOnce("st_restart_v2_parity stream run 2")
-    s.read.parquet(outDir)
-      .select(col("user_id"), col("session_start"), col("session_end"),
-        col("n_events"), r4(col("total_value")).as("total_value"))
-      .orderBy("user_id", "session_start")
+  // semantics; per-user sentinels close final sessions inline).
+  q("st_restart_v2_parity", sessionizeOracle) { (s, dir) =>
+    sessionizeParity(s, dir, "st_restart_v2_parity", Some(1), Seq(rocksDb))(
+      graft.streaming.SessionizeV2.sessionizeStream(_, gapMinutes = 30,
+        watermarkDelay = "3650 days"))
   }
 
   // §2.9 streaming-state BOUND inside the oracle gate. The eleven
@@ -3088,24 +2954,17 @@ object PipelineQueries extends QueryPack {
       |ORDER BY event_type""".stripMargin) { (s, dir) =>
     val ev = Tables.load(s, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
-    val (lo, hi) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
-    val spanMs = hi.getTime - lo.getTime
-    def cut(k: Int) = new java.sql.Timestamp(lo.getTime + spanMs * k / 4)
-    val dupes = ev.filter(col("event_id") % 10 === 0) // same rows again, same ts
-    val withDupes = ev.unionByName(dupes)
-    val stage = tmpDir("graft_st_bound_in")
-    val outDir = tmpDir("graft_st_bound_out")
-    stageSplit(withDupes, stage, Seq(
-      (col("ts") < cut(1), "b1.parquet", 1000000L),
-      (col("ts") >= cut(1) && col("ts") < cut(2), "b2.parquet", 2000000L),
-      (col("ts") >= cut(2) && col("ts") < cut(3), "b3.parquet", 3000000L),
-      (col("ts") >= cut(3), "b4.parquet", 4000000L)))
+    val Seq(_, c1, c2, c3, hi) = timeCuts(ev, 4)
+    // the duplicates: the same rows again, with the same ts
+    val withDupes = ev.unionByName(ev.filter(col("event_id") % 10 === 0))
     // the finalizing no-data batch runs the LAST eviction, at
     // watermark max(ts) − delay; the census below depends on it
-    val query = drainToParquet(s, "st_state_bound_parity stream", outDir,
-        tmpDir("graft_st_bound_ckpt"), noDataBatches) { c =>
-      staged(c, ev.schema, stage)
+    val (outDir, query) = streamParity(s, "st_state_bound_parity", Seq(Seq(
+        withDupes.filter(col("ts") < c1),
+        withDupes.filter(col("ts") >= c1 && col("ts") < c2),
+        withDupes.filter(col("ts") >= c2 && col("ts") < c3),
+        withDupes.filter(col("ts") >= c3))), extraConf = Seq(noDataBatches)) { in =>
+      in.head
         .withWatermark("ts", "3 days")
         // NOT dropDuplicates(keys): with the event-time column absent
         // from the key, that operator never evicts (state ∝ stream
@@ -3161,29 +3020,15 @@ object PipelineQueries extends QueryPack {
       |GROUP BY 1, 2
       |ORDER BY day, bucket""".stripMargin) { (s, dir) =>
     val ev = Tables.load(s, dir, "events").select(col("ts"), col("value"))
-    val bounds = ev.agg(min("ts").as("lo"), max("ts").as("hi")).collect()(0)
-    val (lo, hi) = (bounds.getTimestamp(0).getTime, bounds.getTimestamp(1).getTime)
-    val c1 = new java.sql.Timestamp(lo + (hi - lo) / 3)
-    val c2 = new java.sql.Timestamp(lo + 2 * (hi - lo) / 3)
+    val Seq(_, c1, c2, hi) = timeCuts(ev, 3)
     val dayMs = 24L * 3600 * 1000
-    val sentinelTs = new java.sql.Timestamp(
-      (hi / dayMs) * dayMs + 3 * dayMs + 30L * 60 * 1000)
-    val sentinel = s.range(1)
-      .select(lit(sentinelTs).as("ts"), lit(0.0).as("value"))
-    val stage = tmpDir("graft_st_drift_in")
-    // one staging pass; sentinelTs > max real ts, so ts < sentinelTs
-    // keeps b3 exactly the old `ts > c2` set and b4 the sentinel alone
-    stageSplit(ev.unionByName(sentinel), stage, Seq(
-      (col("ts") <= c1, "b1.parquet", 1000000L),
-      (col("ts") > c1 && col("ts") <= c2, "b2.parquet", 2000000L),
-      (col("ts") > c2 && col("ts") < sentinelTs, "b3.parquet", 3000000L),
-      (col("ts") >= sentinelTs, "b4.parquet", 4000000L)))
-    val outDir = tmpDir("graft_st_drift_out")
+    val sentinel = sentinels(ev, "ts" -> new java.sql.Timestamp(
+      (hi.getTime / dayMs) * dayMs + 3 * dayMs + 30L * 60 * 1000), "value" -> 0.0)()
     // the sentinel's contract: the finalizing no-data batch emits the
     // last real window
-    drainToParquet(s, "st_drift_parity stream", outDir, tmpDir("graft_st_drift_ckpt"),
-        noDataBatches) { c =>
-      graft.streaming.CurationStream.bucketHistogram(staged(c, ev.schema, stage),
+    val (outDir, _) = streamParity(s, "st_drift_parity", Seq(slices(ev, Seq(c1, c2)) :+ sentinel),
+        extraConf = Seq(noDataBatches)) { in =>
+      graft.streaming.CurationStream.bucketHistogram(in.head,
         "value", "ts", lo = 0.0, hi = 500.0, nBuckets = 10,
         windowDur = "1 day", delay = "1 hour")
     }
@@ -3236,20 +3081,15 @@ object PipelineQueries extends QueryPack {
     val evd = docs.withColumn("ts",
       timestamp_seconds(lit(1704067200L) + col("doc_id")))
     val maxId = docs.agg(max("doc_id")).collect()(0).getLong(0)
-    val sentinel = s.range(1).select(lit(-1L).as("doc_id"), lit("zz").as("text"),
-      timestamp_seconds(lit(1704067200L + maxId + 7L * 24 * 3600)).as("ts"))
-    val stage = tmpDir("graft_st_trend_in")
-    // cut mid-window: half the corpus, NOT a window boundary multiple.
-    // One staging pass; the sentinel's doc_id=-1 must not match b1's
-    // ≤ maxId/2, so b1 requires real (non-negative) ids
-    stageSplit(evd.unionByName(sentinel), stage, Seq(
-      (col("doc_id") >= 0 && col("doc_id") <= maxId / 2, "b1.parquet", 1000000L),
-      (col("doc_id") > maxId / 2 || col("doc_id") < 0, "b2.parquet", 2000000L)))
-    val outDir = tmpDir("graft_st_trend_out")
+    val sentinel = sentinels(evd, "doc_id" -> -1L, "text" -> "zz",
+      "ts" -> timestamp_seconds(lit(1704067200L + maxId + 7L * 24 * 3600)))()
+    // cut mid-window: half the corpus, NOT a window boundary multiple;
     // same sentinel contract as st_drift_parity
-    drainToParquet(s, "st_trending_parity stream", outDir, tmpDir("graft_st_trend_ckpt"),
-        noDataBatches) { c =>
-      graft.streaming.CurationStream.trendingTerms(staged(c, evd.schema, stage),
+    val (outDir, _) = streamParity(s, "st_trending_parity", Seq(Seq(
+        evd.filter(col("doc_id") <= maxId / 2),
+        evd.filter(col("doc_id") > maxId / 2).unionByName(sentinel))),
+        extraConf = Seq(noDataBatches)) { in =>
+      graft.streaming.CurationStream.trendingTerms(in.head,
         "text", "ts", windowDur = "2 minutes", delay = "1 minute", k = k)
     }
     val hhSchema = StructType(Seq(

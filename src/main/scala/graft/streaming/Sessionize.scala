@@ -63,7 +63,8 @@ object Sessionize {
     * a gap of each other merge into ONE session, matching the batch
     * twin, rather than each becoming a singleton. The stale session
     * closes when a later stale event jumps past its gap, when it is
-    * bridged into the open session, or at the key's event-time timeout
+    * bridged into the open session, once the watermark passes its
+    * horizon ([[advance]]), or at the key's event-time timeout
     * ([[DuoState]] carries it ACROSS micro-batches — only the one-shot
     * [[foldBatch]] drains it eagerly); the open session stays
     * untouched.
@@ -122,7 +123,8 @@ object Sessionize {
     * gap 10 min: the batch twin merges them into ONE session, so
     * flushing at batch end would emit two splits). It closes only when
     * superseded by a later stale run, bridged into the open session,
-    * or at the key's event-time timeout.
+    * once the watermark passes its horizon, or at the key's event-time
+    * timeout.
     */
   case class DuoState(open: SessionState, stale: Option[SessionState])
 
@@ -157,6 +159,32 @@ object Sessionize {
     cur
   }
 
+  /** One key's micro-batch, shared by both streaming processors
+    * ([[Sessionize]] and [[SessionizeV2]]): fold the key's new events
+    * (sorted) into its carried state, emitting closed sessions to
+    * `out`, then flush the stale run if the watermark has closed it.
+    * Returns the state to keep, which each processor stores and sets
+    * its expiry on at the open session's horizon.
+    *
+    * Eager stale flush: that expiry is the OPEN session's, so a carried
+    * stale run — certainly closed once the watermark passes ITS horizon
+    * — would otherwise wait for the open session to close (forever, if
+    * the query stops first). Emit it as soon as the watermark proves no
+    * event can bridge into it. STRICT inequality in micros: an event
+    * stamped exactly at the watermark is still admitted and (gap is
+    * inclusive) could bridge a run whose horizon equals the watermark.
+    */
+  private[streaming] def advance(gapUs: Long, userId: Long, events: Iterator[Event],
+      prior: Option[DuoState], watermarkMs: Long,
+      out: ArrayBuffer[Session]): Option[DuoState] = {
+    val (cur, stale) = foldBatchCarry(gapUs, userId,
+      events.toSeq.sortBy(e => (micros(e.ts), e.value)),
+      prior.map(_.open), prior.flatMap(_.stale), out)
+    val closed = stale.filter(st => watermarkMs * 1000L > st.lastTs + gapUs)
+    closed.foreach(st => out += toSession(userId, st))
+    cur.map(DuoState(_, if (closed.isDefined) None else stale))
+  }
+
   private def step(gapUs: Long)(
       userId: Long, events: Iterator[Event],
       state: GroupState[DuoState]): Iterator[Session] = {
@@ -170,30 +198,12 @@ object Sessionize {
         toSession(userId, d.open)).iterator
     }
     val out = ArrayBuffer.empty[Session]
-    val prior = state.getOption
-    val (cur, stale0) = foldBatchCarry(gapUs, userId,
-      events.toSeq.sortBy(e => (micros(e.ts), e.value)),
-      prior.map(_.open), prior.flatMap(_.stale), out)
-    // Eager stale flush: the timeout is registered at the OPEN
-    // session's horizon, so a carried stale run — certainly closed
-    // once the watermark passes ITS horizon — would otherwise wait for
-    // the open session to close (indefinitely, if the open session
-    // keeps extending; forever, if the query stops first). Emit it as
-    // soon as the watermark proves no event can bridge into it.
-    // STRICT inequality in micros: an event stamped exactly at the
-    // watermark is still admitted and (gap is inclusive) could bridge
-    // a run whose horizon equals the watermark.
-    val stale = stale0.filter { st =>
-      val closedByWatermark =
-        state.getCurrentWatermarkMs() * 1000L > st.lastTs + gapUs
-      if (closedByWatermark) out += toSession(userId, st)
-      !closedByWatermark
-    }
-    cur.foreach { s =>
-      state.update(DuoState(s, stale))
-      // GroupState timeouts are epoch-MILLIS; round the micros horizon up
-      state.setTimeoutTimestamp(Math.floorDiv(s.lastTs + gapUs + 999L, 1000L))
-    }
+    advance(gapUs, userId, events, state.getOption, state.getCurrentWatermarkMs(), out)
+      .foreach { d =>
+        state.update(d)
+        // GroupState timeouts are epoch-MILLIS; round the micros horizon up
+        state.setTimeoutTimestamp(Math.floorDiv(d.open.lastTs + gapUs + 999L, 1000L))
+      }
     out.iterator
   }
 

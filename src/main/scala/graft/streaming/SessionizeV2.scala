@@ -37,19 +37,17 @@ object SessionizeV2 {
                                  timerValues: TimerValues): Iterator[Session] = {
       val out = ArrayBuffer.empty[Session]
       val prior = Option(session.get())
-      val (cur, stale) = Sessionize.foldBatchCarry(gapUs, key,
-        rows.toSeq.sortBy(e => (Sessionize.micros(e.ts), e.value)),
-        prior.map(_.open), prior.flatMap(_.stale), out)
-      cur.foreach { s =>
-        session.update(DuoState(s, stale))
-        // one live timer per key: delete the previous expiry before
-        // registering the new one — re-registering every batch without
-        // cleanup accumulates a stale timer per extension, each firing
-        // later just to be discarded by the expiry guard
-        prior.filter(p => p.open.lastTs != s.lastTs)
-          .foreach(p => getHandle.deleteTimer(expiryMs(p.open)))
-        getHandle.registerTimer(expiryMs(s))
-      }
+      Sessionize.advance(gapUs, key, rows, prior, timerValues.getCurrentWatermarkInMs(), out)
+        .foreach { d =>
+          session.update(d)
+          // one live timer per key: delete the previous expiry before
+          // registering the new one — re-registering every batch without
+          // cleanup accumulates a stale timer per extension, each firing
+          // later just to be discarded by the expiry guard
+          prior.filter(p => p.open.lastTs != d.open.lastTs)
+            .foreach(p => getHandle.deleteTimer(expiryMs(p.open)))
+          getHandle.registerTimer(expiryMs(d.open))
+        }
       out.iterator
     }
 

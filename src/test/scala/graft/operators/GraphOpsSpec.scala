@@ -1,6 +1,9 @@
 package graft.operators
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -117,6 +120,67 @@ class GraphOpsSpec extends SparkSpec {
     assert(allPaths(df, bound = Int.MaxValue.toLong + 1) == distributed)
     assert(allPaths(df, bound = Long.MaxValue) == distributed)
     assert(allPaths(df, bound = Int.MaxValue.toLong) == distributed)
+  }
+
+  /** The jobs `body` starts, counted by a listener. The listener bus is
+    * asynchronous but ordered, so a marker job run after `body` proves
+    * every earlier job start was delivered.
+    */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val marker = "jobsOf marker"
+    val jobs = new AtomicInteger
+    val delivered = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          delivered.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(delivered.await(60, TimeUnit.SECONDS), "the marker job was never seen")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("small-graph gate: one pass decides and collects, in no more jobs than a probe and a collect") {
+    // the gate against the limit-count probe and separate collect it
+    // replaced, on one to many partitions, under and over the bound
+    val bound = 10L
+    for (parts <- Seq(1, 4, 16); n <- Seq(5L, 50L)) {
+      val e = spark.range(0, n, 1, parts).select(col("id").as("src"), (col("id") + 1).as("dst"))
+      val probeAndCollect = jobsOf { if (e.limit(bound.toInt + 1).count() <= bound) e.collect() }
+      var got: Option[Array[org.apache.spark.sql.Row]] = None
+      val gate = jobsOf { got = GraphOps.collectIfSmall(e, bound) }
+      assert(gate <= probeAndCollect, s"$parts partitions, $n edges: $gate vs $probeAndCollect jobs")
+      assert(got.map(_.length) == (if (n <= bound) Some(n.toInt) else None))
+    }
+    assert(jobsOf(GraphOps.collectIfSmall(spark.range(5).toDF(), 0L)) == 0)
+
+    // every operator on both sides of its gate: the driver path runs
+    // fewer jobs than the distributed loop, and no more than it ran with
+    // the gate decided in one pass (with a probe and a separate collect
+    // it ran 4, 2, 6 and 6)
+    val df = someEdges.toDF("src", "dst", "w")
+    val nodes = df.select(col("src").as("id")).union(df.select(col("dst").as("id"))).distinct()
+    val ops = Seq[(String, Int, Long => DataFrame)](
+      ("pageRank", 2, b => GraphOps.pageRank(df, "src", "dst", "w", 6, iters = 4,
+        smallGraphEdges = b)),
+      ("bfs", 1, b => GraphOps.bfs(df, "src", "dst", 1L, 4, smallGraphEdges = b)),
+      ("connectedComponents", 4, b => RelationalOps.connectedComponents(nodes, "id", df,
+        "src", "dst", smallGraphEdges = b)),
+      ("connectedComponentsStar", 3, b => RelationalOps.connectedComponentsStar(nodes, "id", df,
+        "src", "dst", smallGraphEdges = b)))
+    ops.foreach { case (name, most, op) =>
+      val driver = jobsOf(op(200000L).collect())
+      val distributed = jobsOf(op(0L).collect())
+      info(s"$name: $driver jobs on the driver path, $distributed distributed")
+      assert(driver <= most && driver < distributed, s"$name: $driver, $distributed")
+    }
   }
 
   test("null src/dst: both sides of the gate drop the edge instead of failing") {

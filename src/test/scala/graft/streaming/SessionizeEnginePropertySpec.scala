@@ -57,7 +57,6 @@ class SessionizeEnginePropertySpec extends graft.SparkSpec {
 
   private def runEngine(api: String, evs: Seq[Ev], nBatches: Int,
                         rnd: scala.util.Random): Set[(Long, Long, Long, Long, Double)] = {
-    import spark.implicits._
     val sorted = evs.sortBy(e => (e.us, e.value))
     val maxUs = sorted.map(_.us).max
     val sentinels = evs.map(_.user).distinct.sorted
@@ -68,8 +67,15 @@ class SessionizeEnginePropertySpec extends graft.SparkSpec {
     val batches0 = cutIdx.sliding(2).map { case Seq(a, b) =>
       sorted.slice(a, b)
     }.toSeq
-    val batches = batches0.dropRight(1) :+ (batches0.last ++ sentinels)
+    drain(api, batches0.dropRight(1) :+ (batches0.last ++ sentinels), "3650 days")
+  }
 
+  /** The sessions `api` emits when `batches` drain as one file-source
+    * micro-batch each under a `delay` watermark.
+    */
+  private def drain(api: String, batches: Seq[Seq[Ev]],
+                    delay: String): Set[(Long, Long, Long, Long, Double)] = {
+    import spark.implicits._
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("ts", TimestampType), StructField("value", DoubleType)))
     def toDf(b: Seq[Ev]): DataFrame =
@@ -90,8 +96,8 @@ class SessionizeEnginePropertySpec extends graft.SparkSpec {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(stage.toString)
     val sessions = api match {
-      case "v1" => Sessionize.sessionizeStream(stream, gapMinutes, "3650 days")
-      case "v2" => SessionizeV2.sessionizeStream(stream, gapMinutes, "3650 days")
+      case "v1" => Sessionize.sessionizeStream(stream, gapMinutes, delay)
+      case "v2" => SessionizeV2.sessionizeStream(stream, gapMinutes, delay)
     }
     val q = sessions.writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)
@@ -124,21 +130,51 @@ class SessionizeEnginePropertySpec extends graft.SparkSpec {
     (evs, 2 + rnd.nextInt(2), rnd)
   }
 
+  /** `body` with the state-store provider `api` runs on (v2 needs RocksDB). */
+  private def onProvider[T](api: String)(body: => T): T = {
+    val saved = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    if (api == "v2") spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally if (api == "v2") saved match {
+      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
+      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+  }
+
   for (api <- Seq("v1", "v2"); seed <- Seq(11, 22, 33, 44)) {
     test(s"$api engine == batch sessionization (seeded random case $seed)") {
-      val saved = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      if (api == "v2") spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      onProvider(api) {
         val (evs, nBatches, rnd) = randomCase(seed)
         val got = runEngine(api, evs, nBatches, rnd)
         val ref = reference(evs)
         assert(got == ref,
           s"api=$api seed=$seed\n got=${got.toSeq.sorted}\n ref=${ref.toSeq.sorted}")
-      } finally if (api == "v2") saved match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
+    }
+  }
+
+  for (api <- Seq("v1", "v2")) {
+    test(s"$api engine flushes a stale run once the watermark closes it, while the open session stays open") {
+      // gap 10 min, a REAL 30-minute watermark. Batch k drops events
+      // older than the watermark of batch k − 2 and evicts against that
+      // of batch k − 1 (75 and 100 min for the last batch here). User
+      // 1's session 100..105 stays open to the end: its horizon, 115
+      // min, is past the final 100-min watermark, so its expiry never
+      // fires. User 1's late event at 78 min is admitted (≥ 75), more
+      // than a gap before the open session, and its run is closed for
+      // good (78 + 10 < 100) in the very batch it arrives in, with no
+      // later event of user 1 to flush it: it is emitted only if the
+      // step flushes what the watermark has closed. User 2's first
+      // session closes inline when its event at 130 min arrives.
+      def at(user: Long, min: Int) = Ev(user, base + min * 60000000L, min.toDouble)
+      val batches = Seq(Seq(at(1, 100), at(1, 105), at(2, 100)), Seq(at(2, 130)),
+        Seq(at(1, 78)))
+      val got = onProvider(api)(drain(api, batches, "30 minutes"))
+      def single(user: Long, min: Int) =
+        (user, base + min * 60000000L, base + min * 60000000L, 1L, min.toDouble)
+      assert(got == Set(single(1, 78), single(2, 100)),
+        s"api=$api got=${got.toSeq.sorted}")
     }
   }
 }
